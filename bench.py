@@ -206,8 +206,8 @@ def _dim768_probe(spark, sf_dir: str) -> dict:
         #     worker spin-up at these corpus sizes (500-5k docs).
         #   topk_cosine_768_sec — the flagship per-query path over the
         #     stored vectors: driver query embed + full-scan cosine
-        #     top-10 (np_query_scorer tier for dim > 256), first
-        #     execution, codegen included.
+        #     top-10 (the one Arrow-batched query scorer,
+        #     functions/vector.py::fold_query_scorer), first execution.
         docs = load_documents(spark, sf_dir)
         t0 = time.perf_counter()
         emb = (

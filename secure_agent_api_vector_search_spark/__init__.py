@@ -14,8 +14,8 @@ DataFrame/Catalyst plans designed for 100 TB scale:
   (per-partition heap + driver merge, no global sort);
 - IVF index → KMeans centroids + ``list_id``-partitioned parquet, so
   probing is ordinary partition pruning;
-- vector math → native higher-order-function expressions (whole-stage
-  codegen, zero Python in the hot path);
+- vector math → one Arrow-batched left-fold scorer for every
+  query-vs-corpus top-k, native expressions for column pairs;
 - small dimensions → broadcast joins; AQE on for skew.
 """
 

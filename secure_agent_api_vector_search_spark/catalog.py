@@ -109,11 +109,14 @@ def _cos(a: str, b: str) -> str:
 
 def _l2(a: str, b: str) -> str:
     """sqrt(greatest(dot(a,a) - 2*dot(a,b) + dot(b,b), 0)) — same
-    expansion as functions/vector.py::l2_distance."""
-    return (
-        f"sqrt(greatest(list_dot_product({a}, {a}) - 2.0 * list_dot_product({a}, {b}) "
-        f"+ list_dot_product({b}, {b}), 0.0))"
+    expansion and NULL guard as functions/vector.py::l2_distance
+    (GREATEST skips a NULL argument, so an unguarded NULL vector would
+    score a perfect 0.0)."""
+    sq = (
+        f"list_dot_product({a}, {a}) - 2.0 * list_dot_product({a}, {b}) "
+        f"+ list_dot_product({b}, {b})"
     )
+    return f"CASE WHEN {sq} IS NOT NULL THEN sqrt(greatest({sq}, 0.0)) END"
 
 
 _REV = "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(8,4)))"
@@ -1520,7 +1523,7 @@ def find_similar_by_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     # score 0.0, never NaN). Rounded to 9 dp because the oracle's SQL
     # recomputation sums the same products in a different order — both
     # engines rank and compare on the rounded value.
-    sim = F.round(V.dot("embedding", [float(x) for x in qv], 64), 9)
+    sim = F.round(V.fold_query_scorer(qv, "dot")(F.col("embedding")), 9)
     return (
         emb.select("doc_id", sim.alias("similarity"))
         .orderBy(F.col("similarity").desc(), F.col("doc_id").asc())

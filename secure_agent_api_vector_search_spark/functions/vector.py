@@ -1,4 +1,4 @@
-"""Vector column expressions — the engine's analog of pgvector operators.
+"""Vector scoring — the engine's analog of pgvector operators.
 
 Reference mapping (SURVEY.md §2.3):
 - `<=>` cosine distance (tools.yaml:24,26, V2) → :func:`cosine_distance`
@@ -7,20 +7,21 @@ Reference mapping (SURVEY.md §2.3):
 - L2 opclass of the ivfflat index (sql/05_vector_index.sql:4) →
   :func:`l2_distance`
 
-Everything here is a **native Catalyst expression**: no Python, no
-serialization, evaluated over the parquet scan on the JVM. When the
-dimension is statically known (``dim=...`` — every production call
-site knows it), the fold is UNROLLED into a plain arithmetic
-expression `a[0]*b[0] + a[1]*b[1] + …`, which participates in
-whole-stage codegen. The lambda higher-order form (`zip_with` +
-`aggregate`) is kept as the unknown-dim fallback, but HOFs evaluate
-INTERPRETED in Spark (no codegen — profiled 50-100× slower in the LSH
-screen), so at 100 TB the unrolled form is the difference between a
-scan-speed kNN and an interpreter-bound one.
+Two forms, split by what the query side is:
+
+- **Query vs corpus** (the reference's one query, `ORDER BY embedding
+  <=> $1 LIMIT $2`): :func:`fold_query_scorer`, one Arrow-batched
+  numpy kernel for every metric and every dim. It holds the edge
+  contract (null, short, zero-norm and NaN rows) in one guard.
+- **Column vs column** (dedup, knn, pq pairs): native Catalyst
+  expressions. With a statically known ``dim`` ≤ UNROLL_MAX_DIM the
+  fold is UNROLLED into `a[0]*b[0] + a[1]*b[1] + …`, which joins
+  whole-stage codegen; otherwise the interpreted `zip_with` +
+  `aggregate` HOF fold.
 
 Numerical contract: all math is float64 with a **left fold in array
-order** — the unrolled sum associates `((0+t0)+t1)+…` exactly like
-the aggregate fold, so both forms are bit-for-bit identical to
+order** — the unrolled sum, the HOF fold and the query scorer all
+associate `((0+t0)+t1)+…`, so every form is bit-for-bit identical to
 DuckDB's `list_dot_product` and the correctness oracle compares at
 full precision, no rounding tolerance needed.
 """
@@ -28,6 +29,7 @@ full precision, no rounding tolerance needed.
 from __future__ import annotations
 
 import math
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -85,11 +87,7 @@ def _unrolled_sql(a, b, dim: int) -> str | None:
 # 768), and even a balanced-tree unroll dies in janino ("Code grows
 # beyond 64 KB" — one expression is one generated method, unsplittable;
 # measured here at dim 768, which then runs interpreted at HOF speed).
-# Above the cap, per-row work must leave the expression world: use
-# :func:`np_query_scorer` (Arrow-batched whole-batch numpy — the same
-# pattern as the LSH screens, profiled 50-100× over the interpreted
-# HOF) when the query side is a driver-known vector, or accept the HOF
-# fold when it is not.
+# Above the cap the column-vs-column forms take the HOF fold.
 UNROLL_MAX_DIM = 256
 
 
@@ -147,116 +145,49 @@ def l2_distance(a, b, dim: int | None = None) -> Column:
     The expansion (rather than Σ(a_i−b_i)²) is used deliberately: the
     DuckDB oracle can express the identical arithmetic with three
     `list_dot_product` calls, giving bit-exact parity. `greatest(·, 0)`
-    clamps the tiny negative residue when a ≈ b. Operands pass through
-    raw so name/literal forms keep the cheap SQL construction.
+    clamps the tiny negative residue when a ≈ b; a NULL operand (or
+    element) scores NULL. Operands pass through raw so name/literal
+    forms keep the cheap SQL construction.
     """
     sq = dot(a, a, dim) - F.lit(2.0) * dot(a, b, dim) + dot(b, b, dim)
-    return F.sqrt(F.greatest(sq, F.lit(0.0)))
-
-
-def np_query_scorer(query_vec, metric: str = "cosine"):
-    """Arrow-batched numpy scorer for dims beyond UNROLL_MAX_DIM — the
-    100 TB scan path at the reference's true dimension (``vector(768)``,
-    reference sql/02_schema.sql:14).
-
-    Returns a one-argument Column function ``f(vec_col) -> double`` that
-    scores every row against the driver-known ``query_vec``: the query
-    is closed over (shipped once with the task, like the F.lit inline),
-    only the embedding column crosses the Arrow boundary, and each batch
-    is ONE BLAS matmul ``M @ q`` — no per-row Python. This is the same
-    whole-batch-numpy discipline as the LSH screens (operators/dedup.py)
-    and the embedder (embedder.py), which profiled 50-100× over the
-    interpreted HOF fold that Spark uses for >256-dim expressions.
-
-    Numerics are float64 like the expression forms; the summation order
-    is BLAS pairwise, so scores agree with the fold to ~1e-15 relative —
-    rank-stable, but not the bit-exact tier (that is the ≤256 unroll the
-    oracle gate pins at dim 64).
-    """
-    if metric not in ("cosine", "dot", "l2"):
-        raise ValueError(f"unknown metric {metric!r}")
-    q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-    qq = float(q @ q)
-    dim = len(q)
-
-    @F.pandas_udf("double")
-    def score(v: pd.Series) -> pd.Series:
-        vals = v.to_numpy()
-        # null vectors score null (matching the expression forms' null
-        # propagation) — callers order nulls last / filter post-limit.
-        # Rows SHORTER than the query dim score null too (l2: 0.0, the
-        # greatest(null, 0.0) quirk): a malformed row must stay a row
-        # drop, never an np.stack batch failure (r13 ADVICE).
-        res = np.full(len(vals), 0.0 if metric == "l2" else None, dtype=object)
-        lens = np.fromiter(
-            (len(x) if x is not None else -1 for x in vals),
-            dtype=np.int64, count=len(vals),
-        )
-        mask = lens >= dim
-        if mask.any():
-            m = _stack_to_dim(vals[mask], lens[mask], dim)
-            d = m @ q
-            with np.errstate(divide="ignore", invalid="ignore"):
-                if metric == "dot":
-                    out = d
-                elif metric == "cosine":
-                    den = np.sqrt(np.einsum("ij,ij->i", m, m)) * np.sqrt(qq)
-                    out = d / den
-                else:  # l2 via the same |a|²−2ab+|b|² expansion as l2_distance
-                    out = np.sqrt(
-                        np.maximum(np.einsum("ij,ij->i", m, m) - 2.0 * d + qq, 0.0)
-                    )
-            vals_out = out.astype(object)
-            if metric == "cosine":
-                # a zero-norm operand has no defined cosine: score NULL
-                # (ordered last / dropped by cursor filters, like null
-                # vectors) — never NaN, which Spark orders ABOVE every
-                # real double in a DESC top-k (r13 VERDICT item 2).
-                # `den == 0` is False for NaN inputs, so NaN-element
-                # vectors still propagate NaN like the expression form.
-                vals_out[den == 0.0] = None
-            res[mask] = vals_out
-        return pd.Series(res)
-
-    return score
-
-
-def _stack_to_dim(sub: np.ndarray, lens: np.ndarray, dim: int) -> np.ndarray:
-    """Stack an object array of float vectors (each len ≥ dim) into a
-    (batch, dim) float64 matrix. Uniform-length batches (the only shape
-    a real corpus produces) take the single np.stack fast path; a
-    ragged batch slices each row to the query dim first — the unrolled
-    expression reads a[0..dim) and ignores any tail, so truncation is
-    the value-identical treatment of overlong rows."""
-    if int(lens.min()) == dim == int(lens.max()):
-        return np.stack(sub)
-    return np.stack([np.asarray(x, dtype=np.float64)[:dim] for x in sub])
+    # GREATEST skips a NULL argument: without the guard a NULL vector
+    # would score sqrt(0.0) = 0.0, a perfect match
+    return F.when(sq.isNotNull(), F.sqrt(F.greatest(sq, F.lit(0.0))))
 
 
 def fold_query_scorer(query_vec, metric: str = "cosine"):
-    """Arrow-batched numpy scorer that reproduces the unrolled
-    left-fold expression BIT-FOR-BIT — the exact-values twin of
-    :func:`np_query_scorer` (whose BLAS pairwise summation is
-    rank-stable but not bit-identical to the fold).
+    """The one query-vs-corpus scorer: every exact top-k against a
+    driver-known query vector scores through this function — the
+    top-k, its keyset page, the grouped search, the IVF probe, the
+    hybrid score and the SQ re-rank.
 
-    Per-row operation order is identical to the expression form:
-    dot = (((0.0 + t_0) + t_1) + …) with one multiply per term —
+    Returns a one-argument Column function ``f(vec_col) -> double``:
+    an Arrow-batched pandas iterator UDF with the query closed over
+    (shipped once with the task), so only the vector column crosses the
+    Arrow boundary. ``float`` arrays are widened to float64 exactly, as
+    a cast would. It is an iterator UDF like ``embedder.embed_udf``, so
+    Spark chains ``score(embed(text))`` into one Python stage and
+    freshly computed embeddings never travel back to the JVM.
+
+    Values are bit-for-bit those of the unrolled left-fold expressions
+    (:func:`dot`, :func:`cosine_similarity`, :func:`l2_distance`):
+    dot = (((0.0 + t_0) + t_1) + …) with one multiply per term,
     vectorized ACROSS THE BATCH instead of across the dimension, so
-    each `acc = acc + m[:, i] * q[i]` step performs the same IEEE
-    double ops the codegen'd fold performs per row. Norms, the
-    cosine division, and the |a|²−2ab+|b|² L2 expansion replicate
-    :func:`cosine_similarity` / :func:`l2_distance` term-for-term.
+    each step performs the same IEEE double ops the fold performs per
+    row. The full-precision DuckDB oracle gate relies on this.
 
-    Why it exists (r12 VERDICT item 6): the keyset-paged cursor
-    filter references the score column twice, and Catalyst inlines
-    the unrolled expression into the filter AND the projection —
-    at dim 64 the generated method exceeds Janino's 64 KB limit and
-    the whole stage silently falls back to interpreted execution
-    (guide §7.2). Routing the score through this scorer (marked
-    non-deterministic at the call site, like the >256-dim tier) keeps
-    ONE ArrowEvalPython evaluation feeding a codegen'd filter +
-    TakeOrderedAndProject, with values the full-precision oracle
-    still matches bit-for-bit.
+    Edge contract — one guard, inherited by every caller: a row scores
+    NULL unless its score is a number.
+
+    - a NULL row, or a row shorter than the query, scores NULL for
+      every metric;
+    - a zero-norm row (or a zero-norm query) scores NULL under cosine;
+    - a NaN or NULL element scores NULL: both reach pandas as NaN, and
+      a NaN score would otherwise rank above every real double;
+    - a row longer than the query is read to the query's dim.
+
+    NULL-scored rows are never top-k answers; callers order nulls last
+    and drop them.
     """
     if metric not in ("cosine", "dot", "l2"):
         raise ValueError(f"unknown metric {metric!r}")
@@ -267,50 +198,41 @@ def fold_query_scorer(query_vec, metric: str = "cosine"):
     qq = 0.0
     for x in q:
         qq = qq + x * x
+    qn = math.sqrt(qq)
 
     @F.pandas_udf("double")
-    def score(v: pd.Series) -> pd.Series:
-        vals = v.to_numpy()
-        # null-vector semantics replicate the EXPRESSION tier exactly:
-        # cosine/dot propagate null; l2's `greatest(sq, 0.0)` SKIPS the
-        # null sq (GREATEST ignores nulls), so a null vector scores
-        # sqrt(0.0) = 0.0 there — faithful, if surprising. Rows SHORTER
-        # than the query dim get the same treatment (their a[i] lookups
-        # null the fold): a malformed row stays a row drop, never an
-        # np.stack batch failure (r13 ADVICE).
-        res = np.full(len(vals), 0.0 if metric == "l2" else None, dtype=object)
-        lens = np.fromiter(
-            (len(x) if x is not None else -1 for x in vals),
-            dtype=np.int64, count=len(vals),
-        )
-        mask = lens >= dim
-        if mask.any():
-            m = _stack_to_dim(vals[mask], lens[mask], dim)
-            d = np.zeros(len(m), dtype=np.float64)   # (0.0 + t0) + t1 + …
-            na = np.zeros(len(m), dtype=np.float64)
-            for i in range(dim):
-                c = m[:, i]
-                d = d + c * q[i]
-                na = na + c * c
-            with np.errstate(divide="ignore", invalid="ignore"):
+    def score(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        for v in batches:
+            vals = v.to_numpy()
+            lens = np.fromiter(
+                (-1 if x is None else len(x) for x in vals), dtype=np.int64, count=len(vals)
+            )
+            # the guard: NaN crosses the Arrow boundary as NULL, so null
+            # and short rows are left NaN, as is any row whose fold
+            # meets a NaN or a NULL element (NaN in pandas)
+            out = np.full(len(vals), np.nan)
+            idx = np.flatnonzero(lens >= dim)
+            if len(idx):
+                rows = vals[idx]
+                if int(lens[idx].max()) > dim:
+                    rows = [x[:dim] for x in rows]
+                m = np.stack(rows).astype(np.float64, copy=False)
+                d = np.zeros(len(idx), dtype=np.float64)
+                for i in range(dim):
+                    d += m[:, i] * q[i]
                 if metric == "dot":
-                    out = d
-                elif metric == "cosine":
-                    den = np.sqrt(na) * math.sqrt(qq)
-                    out = d / den
-                else:  # same association as l2_distance's expansion
-                    out = np.sqrt(np.maximum((na - 2.0 * d) + qq, 0.0))
-            vals_out = out.astype(object)
-            if metric == "cosine":
-                # zero-norm rows have no defined cosine: the expression
-                # tier RAISES (ANSI DIVIDE_BY_ZERO) so no defined value
-                # diverges; scoring them NULL keeps NaN — which Spark
-                # orders ABOVE every real double in a DESC top-k — out
-                # of the page order (r13 VERDICT item 2). `den == 0` is
-                # False for NaN, so NaN-element vectors still propagate.
-                vals_out[den == 0.0] = None
-            res[mask] = vals_out
-        return pd.Series(res)
+                    out[idx] = d
+                else:
+                    na = np.zeros_like(d)
+                    for i in range(dim):
+                        na += m[:, i] * m[:, i]
+                    with np.errstate(divide="ignore", invalid="ignore"):
+                        if metric == "cosine":
+                            den = np.sqrt(na) * qn
+                            out[idx] = np.where(den == 0.0, np.nan, d / den)
+                        else:  # same association as l2_distance's expansion
+                            out[idx] = np.sqrt(np.maximum((na - 2.0 * d) + qq, 0.0))
+            yield pd.Series(out)
 
     return score
 

@@ -2,9 +2,11 @@
 
 Fuses a lexical score (term occurrence count over the text) with the
 cosine similarity of the document embedding to the query vector.
-One broadcast-free equi-join documents↔embeddings on the id, scores
-computed as native expressions, then a TakeOrderedAndProject top-k —
-the same scan-bounded shape as the pure vector path.
+One broadcast-free equi-join documents↔embeddings on the id, the
+keyword score as a native expression and the cosine through the one
+query scorer (functions/vector.py::fold_query_scorer), then a
+TakeOrderedAndProject top-k — the same scan-bounded shape as the pure
+vector path.
 """
 
 from __future__ import annotations
@@ -37,23 +39,13 @@ def hybrid_search(
     Output: (doc_id, kw_hits, similarity, score).
     """
     joined = documents.join(embeddings, documents["doc_id"] == embeddings["vec_id"])
-    # statically-known dim → unrolled codegen sum (≤256) instead of the
-    # interpreted HOF fold; bit-identical left-fold order either way.
-    # When the scan already delivers array<double> (load_embeddings
-    # does), pass the bare NAME so the expression builds as one SQL
-    # string instead of per-term py4j Column calls.
-    emb_op = (
-        "embedding"
-        if dict(embeddings.dtypes).get("embedding") == "array<double>"
-        else F.col("embedding").cast("array<double>")
-    )
-    sim = V.cosine_similarity(emb_op, [float(x) for x in query_vec], len(query_vec))
-    hits = keyword_hits("text", term).cast("long")
+    sim = V.fold_query_scorer(query_vec, "cosine")(F.col("embedding"))
     scored = joined.select(
         "doc_id",
-        hits.alias("kw_hits"),
+        keyword_hits("text", term).cast("long").alias("kw_hits"),
         sim.alias("similarity"),
-        (hits.cast("double") * F.lit(float(kw_weight)) + sim).alias("score"),
+    ).withColumn(
+        "score", F.col("kw_hits").cast("double") * F.lit(float(kw_weight)) + F.col("similarity")
     )
     return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 

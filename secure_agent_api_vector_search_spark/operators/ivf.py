@@ -37,6 +37,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from secure_agent_api_vector_search_spark.functions.kmeans import lloyd
+from secure_agent_api_vector_search_spark.functions.vector import fold_normalize
+from secure_agent_api_vector_search_spark.operators.topk import topk_similar
 from secure_agent_api_vector_search_spark.sources.fsutil import fs_delete, fs_swap
 
 
@@ -101,8 +104,6 @@ def _fit_centroids(
     """
     import numpy as np
 
-    from secure_agent_api_vector_search_spark.functions.kmeans import lloyd
-    from secure_agent_api_vector_search_spark.functions.vector import fold_normalize
 
     key = [F.col(order_col).alias("_oid")] if order_col else []
     vecs = embeddings.filter(F.col(vec_col).isNotNull()).select(
@@ -445,8 +446,6 @@ def ivf_search(
     written with :func:`write_ivf` (partitionBy list_id) — the physical
     read touches only nprobe/lists of the data.
     """
-    from secure_agent_api_vector_search_spark.operators.topk import topk_similar
-
     probes = _rank_lists(index.centroids, query_vec)[:nprobe]
     pruned = index.assigned.filter(F.col("list_id").isin(probes))
     return topk_similar(
@@ -474,8 +473,6 @@ def ivf_search_filtered(
     predicate is narrow. The exact-path alternative is
     :func:`operators.topk.topk_similar_filtered`.
     """
-    from secure_agent_api_vector_search_spark.operators.topk import topk_similar
-
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     probes = _rank_lists(index.centroids, query_vec)[:nprobe]
     pruned = index.assigned.filter(F.col("list_id").isin(probes)).filter(pred)

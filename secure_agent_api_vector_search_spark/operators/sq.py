@@ -156,8 +156,7 @@ def sq_topk_rerank(
     from secure_agent_api_vector_search_spark.functions import vector as V
 
     sl = sq_topk(codes, params, query_vec, k=shortlist, id_col=id_col).select(id_col)
-    q = [float(x) for x in query_vec]
-    sim = V.cosine_similarity(F.col(vec_col).cast("array<double>"), F.lit(q), len(q))
+    sim = V.fold_query_scorer(query_vec, "cosine")(F.col(vec_col))
     return (
         embeddings.join(F.broadcast(sl), id_col)
         .select(F.col(id_col), sim.alias("similarity"))

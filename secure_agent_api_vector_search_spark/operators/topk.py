@@ -12,16 +12,17 @@ performance feature.
 Spark shape: `orderBy(sim.desc).limit(k)` → Catalyst plans
 **TakeOrderedAndProject**: each partition keeps a k-element heap and the
 driver merges k·num_partitions candidates — no global sort, no shuffle
-of the table. The similarity expression is chosen by the statically
-known query-vector length: a native UNROLLED codegen sum ≤256 dims
-(functions/vector.py, oracle-bit-exact), an Arrow-batched whole-batch
-numpy scorer above (np_query_scorer — one BLAS matmul per batch; both
-expression forms degrade to interpreted speed past the 64 KB codegen
-method limit). Either way, on a 1000-executor cluster this runs at
-scan speed with only k rows per partition moving to the driver.
+of the table. Every entry point here (top-k, keyset page, grouped,
+filtered, and the IVF probe that calls :func:`topk_similar`) scores
+through ONE function, functions/vector.py::fold_query_scorer: an
+Arrow-batched left-fold kernel, bit-exact against the DuckDB oracle at
+every dim, holding the edge contract once — null, short, NaN-element
+and NULL-element rows score NULL on every metric, zero-norm rows score
+NULL under cosine. NULL-scored rows are never returned. Page 1, page 2 and the IVF probe share that function by
+construction, so the keyset cursor compares like against like.
 
-The query vector is computed ONCE on the driver and inlined as an array
-literal (broadcast with the task closure) — the reference re-evaluates
+The query vector is computed ONCE on the driver and closed over by the
+scorer (shipped with the task closure) — the reference re-evaluates
 `embedding($1, …)` per row inside the database (tools.yaml:24,26);
 doing it once is strictly better with identical semantics (§4).
 """
@@ -30,38 +31,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from secure_agent_api_vector_search_spark.functions import vector as V
-
-
-# Max dim for the unrolled-expression tier of the PAGED top-k
-# (topk_similar_after) — deliberately lower than UNROLL_MAX_DIM: the
-# cursor filter triples the expression (projection + two cursor
-# disjuncts, and the pushed-down copy reaches the scan's DataFilters),
-# so the codegen budget per copy is ~1/3 of the single-projection
-# path's. At 32 dims the tripled method still compiles; at 64 it blows
-# Janino's 64 KB method limit and the stage runs interpreted.
-PAGED_UNROLL_MAX_DIM = 32
-
-
-def _sim_col(metric: str, vec, q, dim: int | None = None) -> tuple[Column, bool]:
-    """Returns (score column, ascending?) for a metric name.
-
-    ``vec``/``q`` are passed in the rawest form available (column name
-    string / literal float list where possible): with dim ≤ 256 the
-    score is then the UNROLLED left-fold codegen expression built as
-    one SQL string (functions/vector.py) — the oracle-bit-exact tier
-    without the per-term py4j construction cost.
-    """
-    if metric == "cosine":
-        return V.cosine_similarity(vec, q, dim), False
-    if metric == "dot":
-        return V.dot(vec, q, dim), False
-    if metric == "l2":
-        return V.l2_distance(vec, q, dim), True
-    raise ValueError(f"unknown metric {metric!r}")
 
 
 def topk_similar(
@@ -95,33 +68,20 @@ def topk_similar(
         raise ValueError(f"null_policy must be 'exclude' or 'fail', got {null_policy!r}")
     vec = F.col(vec_col)
     if null_policy == "fail":
-        # raise_error's NullType coerces into the array branch; the score
-        # expression consumes `vec`, so the check cannot be pruned away
+        # raise_error's NullType coerces into the array branch; the
+        # scorer consumes `vec`, so the check cannot be pruned away
         vec = F.when(vec.isNotNull(), vec).otherwise(
             F.raise_error(F.lit("topk_similar: null embedding with null_policy='fail'"))
         )
-    # Score tier by statically-known dim (= len(query_vec)):
-    # ≤256 → unrolled left-fold codegen (bit-exact vs the oracle);
-    # >256 → Arrow-batched whole-batch numpy (one BLAS matmul per
-    # batch — the scan path at the reference's true dim 768, where
-    # both the unroll and the HOF fold degrade to interpreted speed).
-    # Under null_policy="fail" the vec column is a CASE/raise_error
-    # wrapper — a guard mode, so the small HOF expression is kept.
-    dim = len(query_vec) if null_policy == "exclude" else None
-    if dim is not None and dim > V.UNROLL_MAX_DIM:
-        score, asc = V.np_query_scorer(query_vec, metric)(vec), metric == "l2"
-    else:
-        # exclude mode: the raw name + literal list keep the cheap SQL
-        # construction; fail mode needs the CASE-wrapped Column
-        vec_op = vec_col if null_policy == "exclude" else vec
-        score, asc = _sim_col(metric, vec_op, [float(x) for x in query_vec], dim)
+    score = V.fold_query_scorer(query_vec, metric)(vec)
+    asc = metric == "l2"
     # "exclude" is implemented WITHOUT a pre-filter on the vec column:
     # when the embeddings are themselves UDF-derived (the embed-then-
     # search shape), Catalyst evaluates a filter on the UDF output as a
     # SEPARATE ArrowEvalPython below the scoring one — the embed UDF
     # runs twice and the plan gains an extra Arrow boundary (measured
-    # ~4x on the dim-768 probe). Instead: null vectors score null (all
-    # score forms null-propagate), nulls order LAST explicitly, and the
+    # ~4x on the dim-768 probe). Instead: null vectors score null (the
+    # scorer's edge contract), nulls order LAST explicitly, and the
     # k surviving rows are filtered post-limit — identical results, one
     # embed pass, and the filter touches k rows instead of the corpus.
     order = [
@@ -295,17 +255,16 @@ def topk_similar_grouped(
     the reference's single-tenant tool is the one-group special case of
     this, tools.yaml:22-27).
 
-    Plan shape: score with the same statically-tiered expression as
-    :func:`topk_similar` (unrolled codegen ≤256 dims, whole-batch numpy
-    above), then a partition-local bounded top-k combiner keyed on the
-    GROUP (state ≤ |groups|·k rows — knn.py's combiner with the group
-    as the query id), then the `row_number() OVER (PARTITION BY group)`
-    window for the exact answer. Without the combiner the window
-    exchange carries the whole scored corpus; with it, ≤ |groups|·k
+    Plan shape: score with the same scorer as :func:`topk_similar`,
+    then a partition-local bounded top-k combiner keyed on the GROUP
+    (state ≤ |groups|·k rows — knn.py's combiner with the group as the
+    query id), then the `row_number() OVER (PARTITION BY group)` window
+    for the exact answer. Without the combiner the window exchange
+    carries the whole scored corpus; with it, ≤ |groups|·k
     rows per input partition move — `TakeOrderedAndProject` can't help
     here (it is a single global limit), so the combiner IS the grouped
-    analogue of its per-partition heap. Null embeddings score null and
-    are excluded (same policy as topk_similar's default).
+    analogue of its per-partition heap. NULL-scored rows are dropped by
+    the combiner (same contract as topk_similar's default).
 
     Output: (group_col, id_col, score, rank) with rank 1..k per group,
     ordered by (group, rank).
@@ -316,24 +275,14 @@ def topk_similar_grouped(
         _local_topk_combiner,
     )
 
-    dim = len(query_vec)
-    if dim > V.UNROLL_MAX_DIM:
-        score = V.np_query_scorer(query_vec, metric)(F.col(vec_col))
-        asc = metric == "l2"
-    else:
-        score, asc = _sim_col(metric, vec_col, [float(x) for x in query_vec], dim)
-    # null policy: not-yet-embedded rows are excluded by a filter on the
-    # VECTOR column (a plain IsNotNull pushed to the parquet scan) — a
-    # filter on the computed score would be pushed down too, but as a
-    # re-evaluation of the whole unrolled dot product inside the scan
-    # stage (observed in the plan). The cheap post-rank score-null belt
-    # below covers the residual (element-null arrays), touching only
-    # |groups|·k rows.
-    scored = items.filter(F.col(vec_col).isNotNull()).select(
+    score = V.fold_query_scorer(query_vec, metric)(F.col(vec_col))
+    asc = metric == "l2"
+    scored = items.select(
         F.col(group_col),
         F.col(id_col).alias("neighbor_id"),
         score.alias("similarity"),
     )
+    # the combiner drops NULL scores, so no NULL-scored row is ranked
     reduced = scored.mapInPandas(
         _local_topk_combiner(group_col, k, ascending=asc), schema=scored.schema
     )
@@ -341,7 +290,7 @@ def topk_similar_grouped(
     w = Window.partitionBy(group_col).orderBy(order, F.col("neighbor_id").asc())
     return (
         reduced.withColumn("rank", F.row_number().over(w))
-        .filter((F.col("rank") <= k) & F.col("similarity").isNotNull())
+        .filter(F.col("rank") <= k)
         .select(
             group_col,
             F.col("neighbor_id").alias(id_col),
@@ -400,41 +349,14 @@ def topk_similar_after(
     ``score < last_score OR (score = last_score AND id > last_id)``
     (flipped for ascending metrics), so consecutive pages partition
     the corpus with no gaps or repeats — the float score compared is
-    the SAME expression both pages computed, bit-stable across runs.
+    the SAME function both pages computed, bit-stable across runs.
     """
-    # same score VALUES as topk_similar, but the paged path's physical
-    # tiers differ (r13, VERDICT r12 item 6): the cursor filter
-    # references the score column twice, and Catalyst inlines the
-    # expression into filter AND projection — at dim 64 the generated
-    # method exceeds Janino's 64 KB limit ("Code ... grows beyond
-    # 64 KB", observed) and the WHOLE stage falls back to interpreted
-    # execution, so the "evaluated at scan speed" contract silently
-    # degraded. Above PAGED_UNROLL_MAX_DIM the score therefore routes
-    # through fold_query_scorer — an Arrow-batched numpy fold that is
-    # BIT-IDENTICAL to the unrolled expression (same per-row IEEE op
-    # order; the full-precision oracle still matches) — evaluated
-    # exactly once (ArrowEvalPython), with the cursor filter and
-    # TakeOrderedAndProject back in whole-stage codegen.
-    vec = F.col(vec_col)
-    dim = len(query_vec)
-    if dim > V.UNROLL_MAX_DIM:
-        # >256-dim tier unchanged: np_query_scorer (BLAS order) — the
-        # same scorer topk_similar used for page 1, so the cursor
-        # equality compares like against like.
-        # Non-deterministic marking stops Catalyst from inlining the
-        # UDF into the filter when it splits filter from projection,
-        # which would run the whole-corpus scorer TWICE per page
-        # (2 ArrowEvalPython nodes, measured — the same pathology
-        # topk_similar's exclude-nulls redesign removed)
-        score = V.np_query_scorer(query_vec, metric).asNondeterministic()(vec)
-        asc = metric == "l2"
-    elif dim > PAGED_UNROLL_MAX_DIM:
-        score = V.fold_query_scorer(query_vec, metric).asNondeterministic()(
-            vec.cast("array<double>")
-        )
-        asc = metric == "l2"
-    else:
-        score, asc = _sim_col(metric, vec_col, [float(x) for x in query_vec], dim)
+    # the scorer topk_similar used for page 1. Non-deterministic: the
+    # cursor filter references the score twice, and a deterministic UDF
+    # would be cloned into the filter — the whole-corpus scorer would
+    # run twice per page (2 ArrowEvalPython nodes, measured)
+    score = V.fold_query_scorer(query_vec, metric).asNondeterministic()(F.col(vec_col))
+    asc = metric == "l2"
     s = F.col(score_name)
     if asc:
         cursor = (s > last_score) | ((s == last_score) & (F.col(id_col) > last_id))
@@ -442,7 +364,7 @@ def topk_similar_after(
     else:
         cursor = (s < last_score) | ((s == last_score) & (F.col(id_col) > last_id))
         order = [s.desc_nulls_last(), F.col(id_col).asc()]
-    # null-embedding rows need no post-limit exclude here (unlike
+    # NULL-scored rows need no post-limit exclude here (unlike
     # topk_similar, which has no pre-filter): a null score makes both
     # cursor disjuncts NULL, so the cursor filter itself drops the row
     return (

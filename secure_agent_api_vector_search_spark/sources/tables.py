@@ -167,15 +167,16 @@ def estimate_scan_splits(spark: SparkSession, *paths: str) -> int | None:
 
 
 def _bytes_conf(conf, key: str, default: int) -> int:
-    """Parse a Spark byte-size conf value ('134217728', '128m', '4MB')."""
+    """Parse a Spark byte-size conf value ('134217728', '134217728b',
+    '128m', '4MB')."""
     raw = conf.get(key, None)
     if raw is None:
         return default
-    s = str(raw).strip().lower()
+    s = str(raw).strip().lower().removesuffix("b")
     mult = 1
     for suf, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if s.rstrip("b").endswith(suf):
-            s = s.rstrip("b")[: -1]
+        if s.endswith(suf):
+            s = s[:-1]
             mult = m
             break
     try:

@@ -26,10 +26,22 @@ lookup (tools.yaml:28-38).
 
 from __future__ import annotations
 
+import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+# Module-level on purpose: tool functions run on gateway request
+# threads, and first calls that import at call time can race each
+# other into Python's import-lock deadlock detection (_DeadlockError).
+# Modules, not functions, so callers see attributes rebound after
+# import (tracing wrappers).
+from secure_agent_api_vector_search_spark import embedder
+from secure_agent_api_vector_search_spark.operators import ivf, lookup, topk
+from secure_agent_api_vector_search_spark.sources import tables
 
 _PY_TYPES = {"string": str, "integer": int, "number": (int, float), "boolean": bool}
 
@@ -94,17 +106,12 @@ class Tool:
 
 
 def _find_similar(spark: SparkSession, sf_dir: str, query_text: str, limit: int) -> DataFrame:
-    from secure_agent_api_vector_search_spark.embedder import embed_text, embed_udf
-    from secure_agent_api_vector_search_spark.operators.topk import find_similar_records
-    from secure_agent_api_vector_search_spark.sources.tables import load_documents
-
-    from pyspark.sql import functions as F
-
-    docs = load_documents(spark, sf_dir)
+    docs = tables.load_documents(spark, sf_dir)
     emb = docs.select(
-        F.col("doc_id").alias("vec_id"), embed_udf(64)(F.col("text")).alias("embedding")
+        F.col("doc_id").alias("vec_id"),
+        embedder.embed_udf(64)(F.col("text")).alias("embedding"),
     )
-    return find_similar_records(docs, emb, embed_text(query_text, 64), k=limit)
+    return topk.find_similar_records(docs, emb, embedder.embed_text(query_text, 64), k=limit)
 
 
 def _find_similar_page(
@@ -119,32 +126,23 @@ def _find_similar_page(
     (after_score, after_id) cursor — page 1's last row, handed back by
     the caller. Same projection as find_similar_customer_records, so a
     client pages by swapping tools and threading the cursor."""
-    from pyspark.sql import functions as F
-
-    from secure_agent_api_vector_search_spark.embedder import embed_text, embed_udf
-    from secure_agent_api_vector_search_spark.operators.topk import (
-        join_back_documents,
-        topk_similar_after,
-    )
-    from secure_agent_api_vector_search_spark.sources.tables import load_documents
-
-    docs = load_documents(spark, sf_dir)
+    docs = tables.load_documents(spark, sf_dir)
     # asNondeterministic: the keyset cursor filters on the similarity
     # column derived from this UDF; without the marking Catalyst clones
     # the embed into the extracted filter stage and the corpus embeds
     # 4x per page request (measured: 4 ArrowEvalPython nodes -> 1)
     emb = docs.select(
         F.col("doc_id").alias("vec_id"),
-        embed_udf(64).asNondeterministic()(F.col("text")).alias("embedding"),
+        embedder.embed_udf(64).asNondeterministic()(F.col("text")).alias("embedding"),
     )
-    top = topk_similar_after(
+    top = topk.topk_similar_after(
         emb,
-        embed_text(query_text, 64),
+        embedder.embed_text(query_text, 64),
         last_score=float(after_score),
         last_id=after_id,
         k=limit,
     )
-    return join_back_documents(top, docs)
+    return topk.join_back_documents(top, docs)
 
 
 _ANN_STORE: dict[str, tuple[str, object]] = {}  # sf_dir → (fingerprint, index)
@@ -156,8 +154,6 @@ def _corpus_fingerprint(sf_dir: str) -> str:
     the memoized ANN index so a rewritten corpus invalidates the store
     instead of serving a stale index while the exact tool reads fresh
     data (the advertised full-probe ≡ exact identity must hold)."""
-    import os
-
     path = os.path.join(sf_dir, "documents.parquet")
     parts: list[str] = []
     if os.path.isdir(path):
@@ -200,19 +196,7 @@ def _find_similar_ann(
     The exact tool stays the reference-faithful default (V6: the
     reference's own index routes L2 under a cosine query and is unused
     by its planner — here the approximate path is explicit opt-in)."""
-    from pyspark.sql import functions as F
-
-    from secure_agent_api_vector_search_spark.embedder import embed_text, embed_udf
-    from secure_agent_api_vector_search_spark.operators.ivf import (
-        build_ivf,
-        ivf_search,
-    )
-    from secure_agent_api_vector_search_spark.operators.topk import (
-        join_back_documents,
-    )
-    from secure_agent_api_vector_search_spark.sources.tables import load_documents
-
-    docs = load_documents(spark, sf_dir)
+    docs = tables.load_documents(spark, sf_dir)
     fp = _corpus_fingerprint(sf_dir)
     cached = _ANN_STORE.get(sf_dir)
     if cached is not None and cached[0] == fp:
@@ -222,19 +206,19 @@ def _find_similar_ann(
             cached[1].assigned.unpersist()
         emb = docs.select(
             F.col("doc_id").alias("vec_id"),
-            embed_udf(64)(F.col("text")).alias("embedding"),
+            embedder.embed_udf(64)(F.col("text")).alias("embedding"),
         )
-        index = build_ivf(emb, n_lists=16, seed=42)
+        index = ivf.build_ivf(emb, n_lists=16, seed=42)
         index.assigned.persist().count()  # serve probes from a hot store
         _ANN_STORE[sf_dir] = (fp, index)
     n_lists = len(index.centroids)
-    top = ivf_search(
+    top = ivf.ivf_search(
         index,
-        embed_text(query_text, 64),
+        embedder.embed_text(query_text, 64),
         k=limit,
         nprobe=max(1, min(int(nprobe), n_lists)),
     )
-    return join_back_documents(top, docs)
+    return topk.join_back_documents(top, docs)
 
 
 def _get_record(spark: SparkSession, sf_dir: str, record_id: str) -> DataFrame:
@@ -248,15 +232,7 @@ def _get_record(spark: SparkSession, sf_dir: str, record_id: str) -> DataFrame:
     a reference-side ``record_id = $1`` string compare would not). Any
     non-canonical id binds like any other unmatched VARCHAR value —
     0 rows, never an error and never interpolated SQL (U5)."""
-    import re
-
-    from secure_agent_api_vector_search_spark.operators.lookup import (
-        LOOKUP_COLUMNS,
-        get_record_by_id,
-    )
-    from secure_agent_api_vector_search_spark.sources.tables import load_documents
-
-    docs = load_documents(spark, sf_dir)
+    docs = tables.load_documents(spark, sf_dir)
     # canonical decimal AND inside int64 — a 20+-digit numeral is valid
     # for the reference's VARCHAR(25) ids but can never equal a bigint
     # key, so it binds 0 rows instead of overflowing F.lit (U5: never
@@ -265,8 +241,8 @@ def _get_record(spark: SparkSession, sf_dir: str, record_id: str) -> DataFrame:
         re.fullmatch(r"0|[1-9][0-9]*", record_id) is None
         or int(record_id) > 0x7FFFFFFFFFFFFFFF
     ):
-        return docs.select(*LOOKUP_COLUMNS).limit(0)
-    return get_record_by_id(docs, int(record_id))
+        return docs.select(*lookup.LOOKUP_COLUMNS).limit(0)
+    return lookup.get_record_by_id(docs, int(record_id))
 
 
 _TOOLSETS: dict[str, tuple[Tool, ...]] = {

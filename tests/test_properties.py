@@ -5,8 +5,10 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from secure_agent_api_vector_search_spark.embedder import embed_text
 
@@ -389,3 +391,160 @@ def test_lsh_family_recall_and_budget_property():
         assert r >= 2 or t == 1.0
     with _pytest.raises(ValueError):
         _lsh_family_for(0.05)  # would need >256 hashes — must refuse
+
+
+# ---------------------------------------------------------------------------
+# the vector edge contract (functions/vector.py::fold_query_scorer) on every
+# exact top-k entry point, at dims on both sides of the unroll limit
+# ---------------------------------------------------------------------------
+
+_ROW_KINDS = ("real", "real", "real", "dup", "null", "short", "zero", "nan",
+              "elemnull", "long")
+
+
+def _contract_score(v, q, metric):
+    """Pure-Python model of the scorer: the same left folds, NULL
+    wherever the score is not a number (null / short rows, NaN or NULL
+    elements, zero-norm cosine)."""
+    dim = len(q)
+    if v is None or len(v) < dim or any(x is None for x in v[:dim]):
+        return None
+    d = na = qq = 0.0
+    for x, y in zip(v[:dim], q):
+        d = d + x * y
+        na = na + x * x
+        qq = qq + y * y
+    if metric == "dot":
+        s = d
+    elif metric == "cosine":
+        den = math.sqrt(na) * math.sqrt(qq)
+        s = math.nan if den == 0.0 else d / den
+    else:
+        sq = (na - 2.0 * d) + qq
+        s = sq if math.isnan(sq) else math.sqrt(max(sq, 0.0))
+    return None if math.isnan(s) else s
+
+
+def _spark_order(rows, asc):
+    """(id, score) rows with non-NULL scores in the engine's total
+    order: score (desc, or asc for l2), then id."""
+    return sorted(
+        (r for r in rows if r[1] is not None),
+        key=lambda r: (r[1] if asc else -r[1], r[0]),
+    )
+
+
+def _same(got, want):
+    import struct
+
+    assert len(got) == len(want), (got, want)
+    for g, w in zip(got, want):
+        assert g[:-1] == w[:-1], (got, want)
+        assert struct.pack("<d", g[-1]) == struct.pack("<d", w[-1]), (got, want)
+
+
+def _contract_corpus(kinds, dim, seed):
+    import random
+
+    rnd = random.Random(seed)
+    reals: list[list[float]] = []
+    rows = []
+    for i, kind in enumerate(kinds):
+        if kind == "dup" and reals:
+            v = list(rnd.choice(reals))
+        elif kind == "null":
+            v = None
+        elif kind == "short":
+            v = [rnd.uniform(-1, 1) for _ in range(dim - 1)]
+        elif kind == "zero":
+            v = [0.0] * dim
+        elif kind == "nan":
+            v = [rnd.uniform(-1, 1) for _ in range(dim)]
+            v[rnd.randrange(dim)] = float("nan")
+        elif kind == "elemnull":
+            v = [rnd.uniform(-1, 1) for _ in range(dim)]
+            v[rnd.randrange(dim)] = None
+        elif kind == "long":
+            v = [rnd.uniform(-1, 1) for _ in range(dim + 3)]
+        else:
+            v = [rnd.uniform(-1, 1) for _ in range(dim)]
+            reals.append(v)
+        rows.append((i, i % 2, v))
+    q = [rnd.uniform(-1, 1) for _ in range(dim)]
+    return rows, q
+
+
+@pytest.mark.parametrize("dim", [8, 64, 300])
+@pytest.mark.parametrize("metric", ["cosine", "dot", "l2"])
+@settings(max_examples=3, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    kinds=st.lists(st.sampled_from(_ROW_KINDS), min_size=4, max_size=14),
+    k=st.integers(min_value=1, max_value=4),
+    seed=st.integers(min_value=0, max_value=2**16),
+)
+def test_every_exact_topk_entry_point_holds_the_vector_contract(
+    spark, metric, dim, kinds, k, seed
+):
+    """topk_similar, its keyset page, the grouped search and the IVF
+    probe at full probe all return exactly the rows the contract model
+    ranks — scores bit-equal, never a row the model scores NULL — with
+    null, short, NULL-element, zero-norm, NaN, overlong and duplicate
+    rows mixed in."""
+    from secure_agent_api_vector_search_spark.operators.ivf import IvfIndex, ivf_search
+    from secure_agent_api_vector_search_spark.operators.topk import (
+        topk_similar,
+        topk_similar_after,
+        topk_similar_grouped,
+    )
+
+    rows, q = _contract_corpus(kinds, dim, seed)
+    df = spark.createDataFrame(rows, "vec_id long, grp int, embedding array<double>")
+    asc = metric == "l2"
+    name = "l2_dist" if asc else "similarity"
+    want = _spark_order([(i, _contract_score(v, q, metric)) for i, _, v in rows], asc)
+
+    def pairs(frame):
+        return [(r["vec_id"], r[name]) for r in frame.collect()]
+
+    page1 = pairs(topk_similar(df, q, k=k, metric=metric, score_name=name))
+    _same(page1, want[:k])
+    if page1:
+        last_id, last_score = page1[-1]
+        page2 = pairs(topk_similar_after(
+            df, q, last_score=last_score, last_id=last_id, k=k, metric=metric,
+            score_name=name,
+        ))
+        _same(page1 + page2, want[:2 * k])  # no gaps, no repeats
+
+    grouped = topk_similar_grouped(
+        df, q, group_col="grp", k=k, metric=metric, score_name=name
+    ).collect()
+    want_grouped = []
+    for g in (0, 1):
+        members = {i for i, grp, _ in rows if grp == g}
+        ranked = [r for r in want if r[0] in members][:k]
+        want_grouped += [(g, i, rank, s) for rank, (i, s) in enumerate(ranked, 1)]
+    _same([(r["grp"], r["vec_id"], r["rank"], r[name]) for r in grouped], want_grouped)
+
+    index = IvfIndex(
+        df.withColumn("list_id", (F.col("vec_id") % 3).cast("int")),
+        [[float(c)] * dim for c in range(3)],
+    )
+    _same(pairs(
+        ivf_search(index, q, k=k, nprobe=3, metric=metric).withColumnRenamed(
+            "similarity", name)
+    ), want[:k])
+
+
+def test_topk_l2_null_embedding_is_not_a_hit(spark):
+    """GREATEST skips NULL, so an unguarded l2 scored a NULL embedding
+    sqrt(0.0) = 0.0 — a perfect match that displaced a real neighbour."""
+    from secure_agent_api_vector_search_spark.operators.topk import topk_similar
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 3.0, 4.0]), (3, None)],
+        "vec_id long, embedding array<double>",
+    )
+    got = [(r["vec_id"], r["similarity"]) for r in
+           topk_similar(df, [1.0, 0.0, 0.0], k=2, metric="l2").collect()]
+    assert got == [(1, 0.0), (2, math.sqrt(26.0))]

@@ -61,6 +61,8 @@ def test_bytes_conf_parsing():
             return self.v
 
     assert T._bytes_conf(FakeConf("134217728"), "k", 0) == 128 << 20
+    # a bare `b` suffix is bytes, not an unparseable value
+    assert T._bytes_conf(FakeConf("134217728b"), "k", 0) == 128 << 20
     assert T._bytes_conf(FakeConf("128m"), "k", 0) == 128 << 20
     assert T._bytes_conf(FakeConf("4MB"), "k", 0) == 4 << 20
     assert T._bytes_conf(FakeConf("1g"), "k", 0) == 1 << 30

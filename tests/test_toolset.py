@@ -125,8 +125,7 @@ def test_paged_search_embeds_corpus_once(spark, sf_dir):
     """The v2 paged tool derives similarity from the embed UDF and the
     cursor filters on it: the executed plan must carry exactly TWO
     ArrowEvalPython nodes — the corpus embed evaluated ONCE and the
-    r13 fold scorer evaluated ONCE (dim 64 > PAGED_UNROLL_MAX_DIM, so
-    the paged scorer is Arrow-batched; see operators/topk.py). The
+    one query scorer evaluated ONCE (see operators/topk.py). The
     regression this guards: an UNMARKED embed UDF gets cloned by
     Catalyst into the extracted filter stage and the corpus embeds
     4x per page request (measured 4 nodes before the
@@ -140,6 +139,45 @@ def test_paged_search_embeds_corpus_once(spark, sf_dir):
     # count only the final section
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("ArrowEvalPython") == 2
+
+
+def test_search_embeds_and_scores_corpus_once(spark, sf_dir):
+    """Page-1 twin of test_paged_search_embeds_corpus_once: the
+    find_similar_customer_records plan embeds the corpus once and
+    scores it once — both iterator UDFs chained in ONE ArrowEvalPython
+    node, so the embeddings never return to the JVM — under a
+    TakeOrderedAndProject top-k."""
+    from secure_agent_api_vector_search_spark.toolset import _find_similar
+
+    df = _find_similar(spark, sf_dir, "insurance claim water", 5)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 1
+    assert final.count("_embed(") == 1 and final.count("score(") == 1
+    assert "TakeOrderedAndProject" in final
+
+
+def test_toolset_import_loads_tool_modules():
+    """Every module a tool call needs is imported with the toolset, so
+    concurrent first calls on gateway threads never race each other
+    through call-time imports (Python's import-lock _DeadlockError)."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = "secure_agent_api_vector_search_spark"
+    code = (
+        f"import sys, {pkg}.toolset\n"
+        f"mods = ['embedder', 'operators.topk', 'operators.ivf', "
+        f"'operators.lookup', 'sources.tables']\n"
+        f"print([m for m in mods if '{pkg}.' + m not in sys.modules])"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "[]", out
 
 
 def test_ann_store_invalidates_on_corpus_change(spark, sf_dir, tmp_path):

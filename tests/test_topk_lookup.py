@@ -55,13 +55,13 @@ def test_embed_then_search_evaluates_embed_once(spark):
     Catalyst plan a SECOND ArrowEvalPython for the embed UDF (filter
     branch + scoring branch — the embed-then-search shape paid 2x).
     The exclude policy must keep exactly one embed evaluation, at any
-    dimension tier."""
+    dimension."""
     from secure_agent_api_vector_search_spark.embedder import embed_text, embed_udf
 
     df = spark.createDataFrame(
         [(i, f"doc number {i}") for i in range(20)], "doc_id long, text string"
     )
-    for dim in (64, 768):  # unrolled-expression tier and numpy-scorer tier
+    for dim in (64, 768):  # below and above UNROLL_MAX_DIM
         emb = df.select("doc_id", embed_udf(dim)(F.col("text")).alias("embedding"))
         out = TK.topk_similar(emb, embed_text("doc number 3", dim), k=3, id_col="doc_id")
         plan = out._jdf.queryExecution().executedPlan().toString()

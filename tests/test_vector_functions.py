@@ -103,11 +103,12 @@ def test_unrolled_dot_bit_exact_and_768_fallback(spark, emb):
     assert out["s"] is not None  # fell back, computed, no conversion blow-up
 
 
-def test_np_query_scorer_matches_hof_fold_at_768(spark):
-    """The Arrow/numpy scorer tier (dim > UNROLL_MAX_DIM) must agree
-    with the HOF fold on every metric to float64 round-off — BLAS
-    pairwise summation vs left fold differ only in association order."""
+def test_fold_query_scorer_bit_identical_to_hof_fold_at_768(spark):
+    """At the reference's true dim (768, past UNROLL_MAX_DIM) the one
+    query scorer must still equal the HOF fold BIT-FOR-BIT on every
+    metric: both associate the sum left to right in array order."""
     import random
+    import struct
 
     rnd = random.Random(7)
     rows = [([rnd.uniform(-1, 1) for _ in range(768)],) for _ in range(40)]
@@ -120,35 +121,33 @@ def test_np_query_scorer_matches_hof_fold_at_768(spark):
         ("l2", V.l2_distance("v", qlit)),
     ):
         got = df.select(
-            V.np_query_scorer(q, metric)(F.col("v")).alias("a"), expr.alias("b")
+            V.fold_query_scorer(q, metric)(F.col("v")).alias("a"), expr.alias("b")
         ).collect()
         for r in got:
-            assert r["a"] == pytest.approx(r["b"], rel=1e-12), metric
+            assert struct.pack("<d", r["a"]) == struct.pack("<d", r["b"]), (
+                metric, r["a"], r["b"])
 
 
-def test_np_query_scorer_rejects_unknown_metric():
+def test_fold_query_scorer_rejects_unknown_metric():
     with pytest.raises(ValueError):
-        V.np_query_scorer([1.0, 0.0], "manhattan")
+        V.fold_query_scorer([1.0, 0.0], "manhattan")
 
 
 def test_fold_query_scorer_bit_identical_to_unrolled_expression(spark):
-    """r13 paged-top-k tier: fold_query_scorer must reproduce the
-    unrolled left-fold expression BIT-FOR-BIT (not approximately — the
-    full-precision oracle gates vector_topk_page2 on these doubles),
-    including null rows, zero vectors (NaN cosine), and all metrics."""
+    """The one query scorer must reproduce the unrolled left-fold
+    expression BIT-FOR-BIT (not approximately — the full-precision
+    oracle gates every vector top-k on these doubles) on all metrics;
+    where the expression yields NULL or NaN the scorer yields NULL."""
     import random
     import struct
 
     rnd = random.Random(13)
     rows = [([rnd.uniform(-1, 1) for _ in range(64)],) for _ in range(64)]
-    rows += [(None,), ([0.0] * 64,)]
+    rows += [(None,), ([float("nan")] + [1.0] * 63,), ([0.0] * 64,)]
     df_all = spark.createDataFrame(rows, "v array<double>")
     # ANSI mode makes the cosine EXPRESSION raise DIVIDE_BY_ZERO on a
-    # zero-norm vector (so the paged path never produced a value there);
-    # the fold scorer scores such rows NULL — excluded like null
-    # vectors, never NaN, which would sort ABOVE every real double in a
-    # DESC top-k (r13 VERDICT item 2). Compare bitwise only where the
-    # expression form yields a value.
+    # zero-norm vector, so that row is compared for dot/l2 only (the
+    # scorer's NULL there is pinned by the zero-norm test below)
     df_nz = spark.createDataFrame(rows[:-1], "v array<double>")
     q = [rnd.uniform(-1, 1) for _ in range(64)]
     for metric, expr, df in (
@@ -160,58 +159,52 @@ def test_fold_query_scorer_bit_identical_to_unrolled_expression(spark):
             V.fold_query_scorer(q, metric)(F.col("v")).alias("a"), expr.alias("b")
         ).collect()
         for r in got:
-            if r["a"] is None or r["b"] is None:
-                # null-vector semantics must agree with the expression
-                # tier (incl. l2's greatest(null, 0.0) -> 0.0 quirk)
-                assert r["a"] is None and r["b"] is None, metric
+            if r["b"] is None or math.isnan(r["b"]):
+                assert r["a"] is None, metric  # NULL stays NULL, NaN scores NULL
             else:
                 assert struct.pack("<d", r["a"]) == struct.pack("<d", r["b"]), (
                     metric, r["a"], r["b"])
 
 
 def test_fold_query_scorer_zero_norm_scores_null_never_nan(spark):
-    """r14 (r13 VERDICT item 2): a zero-norm corpus vector has no
-    defined cosine — the scorer must yield NULL (dropped by cursor
-    filters / ordered last, like null vectors) on every scorer tier,
-    never NaN: Spark orders NaN above every real double, so a NaN
-    score would float a garbage row to the TOP of a DESC page."""
+    """A zero-norm corpus vector has no defined cosine — the scorer
+    must yield NULL (dropped by cursor filters / ordered last, like
+    null vectors), never NaN: Spark orders NaN above every real double,
+    so a NaN score would float a garbage row to the TOP of a DESC
+    page."""
     rows = [([1.0] * 64,), ([0.0] * 64,), (None,)]
     df = spark.createDataFrame(rows, "v array<double>")
-    for scorer in (V.fold_query_scorer, V.np_query_scorer):
-        got = df.select(scorer([0.5] * 64, "cosine")(F.col("v")).alias("s")).collect()
-        vals = [r["s"] for r in got]
-        assert vals[0] is not None and not math.isnan(vals[0]), scorer
-        assert vals[1] is None, scorer  # zero-norm -> NULL, not NaN
-        assert vals[2] is None, scorer
-        # dot / l2 have no division: the zero vector keeps a real value
-        assert df.select(scorer([0.5] * 64, "dot")(F.col("v")).alias("s")
-                         ).collect()[1]["s"] == 0.0, scorer
+    scorer = V.fold_query_scorer
+    got = df.select(scorer([0.5] * 64, "cosine")(F.col("v")).alias("s")).collect()
+    vals = [r["s"] for r in got]
+    assert vals[0] is not None and not math.isnan(vals[0])
+    assert vals[1] is None  # zero-norm -> NULL, not NaN
+    assert vals[2] is None
+    # dot / l2 have no division: the zero vector keeps a real value
+    assert df.select(scorer([0.5] * 64, "dot")(F.col("v")).alias("s")
+                     ).collect()[1]["s"] == 0.0
     # a zero-norm QUERY poisons every cosine: all rows NULL, no NaN
-    got = df.select(
-        V.fold_query_scorer([0.0] * 64, "cosine")(F.col("v")).alias("s")
-    ).collect()
+    got = df.select(scorer([0.0] * 64, "cosine")(F.col("v")).alias("s")).collect()
     assert all(r["s"] is None for r in got)
 
 
 def test_fold_query_scorer_ragged_rows_drop_not_crash(spark):
-    """r14 (r13 ADVICE): a malformed row whose vector is shorter than
-    the query dim must score NULL (l2: 0.0 — the greatest(null, 0.0)
-    quirk) like the expression tier's null-propagating a[i] lookups,
-    not fail the whole Arrow batch in np.stack; an overlong row is
-    truncated to the query dim (the expression reads a[0..dim))."""
+    """A malformed row whose vector is shorter than the query dim must
+    score NULL on every metric (l2 included — no greatest(null, 0.0)
+    perfect match), not fail the whole Arrow batch; an overlong row is
+    read to the query dim (the expression reads a[0..dim))."""
     rows = [([1.0] * 64,), ([1.0] * 10,), ([2.0] * 70,), (None,)]
     df = spark.createDataFrame(rows, "v array<double>")
     q = [1.0] * 64
-    for scorer in (V.fold_query_scorer, V.np_query_scorer):
-        got = [r["s"] for r in df.select(
-            scorer(q, "dot")(F.col("v")).alias("s")).collect()]
-        assert got[0] == 64.0, scorer
-        assert got[1] is None, scorer          # short row -> NULL
-        assert got[2] == 128.0, scorer         # overlong row truncated
-        assert got[3] is None, scorer
-        l2 = [r["s"] for r in df.select(
-            scorer(q, "l2")(F.col("v")).alias("s")).collect()]
-        assert l2[1] == 0.0 and l2[3] == 0.0, scorer
+    got = [r["s"] for r in df.select(
+        V.fold_query_scorer(q, "dot")(F.col("v")).alias("s")).collect()]
+    assert got[0] == 64.0
+    assert got[1] is None          # short row -> NULL
+    assert got[2] == 128.0         # overlong row read to the query dim
+    assert got[3] is None
+    l2 = [r["s"] for r in df.select(
+        V.fold_query_scorer(q, "l2")(F.col("v")).alias("s")).collect()]
+    assert l2[1] is None and l2[3] is None
 
 
 def test_fold_normalize_mixed_length_batch(spark):
@@ -235,10 +228,9 @@ def test_fold_normalize_mixed_length_batch(spark):
 
 
 def test_paged_topk_scorer_is_single_arrow_eval(spark, emb):
-    """r13: above PAGED_UNROLL_MAX_DIM the keyset page must evaluate
-    the scorer ONCE as ArrowEvalPython (the tripled inline expression
-    blew Janino's 64 KB method limit and ran interpreted), with the
-    top-k still a TakeOrderedAndProject."""
+    """The keyset page must evaluate the one scorer ONCE as
+    ArrowEvalPython although its cursor filter references the score
+    twice, with the top-k still a TakeOrderedAndProject."""
     from secure_agent_api_vector_search_spark.operators import topk as TK
     from secure_agent_api_vector_search_spark.plans.explain import physical_plan
 
