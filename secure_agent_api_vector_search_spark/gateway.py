@@ -26,6 +26,12 @@ so concurrent tool calls simply become concurrent Spark jobs on the
 shared session. ``ToolGateway`` is a context manager; ``serve()``
 blocks, ``start()`` runs on a daemon thread for embedding in tests or a
 driver process.
+
+Request log: every response logs one structured INFO line on this
+module's logger — ``request {"method", "tool", "status", "rows",
+"validate_ms", "plan_ms", "execute_ms", "serialize_ms"}`` as JSON, the
+phases a request reached. INFO is off unless the embedding process
+enables it (``logging.getLogger(__name__).setLevel(logging.INFO)``).
 """
 
 from __future__ import annotations
@@ -33,6 +39,7 @@ from __future__ import annotations
 import json
 import logging
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
@@ -41,6 +48,10 @@ from secure_agent_api_vector_search_spark import toolset as TS
 
 _SERVER_VERSION = "secure-agent-api-vector-search-spark/gateway"
 _log = logging.getLogger(__name__)
+
+
+def _ms(t0: float) -> float:
+    return round(1000 * (time.perf_counter() - t0), 1)
 
 
 class ToolGateway:
@@ -68,12 +79,31 @@ class ToolGateway:
         gateway = self
 
         class Handler(BaseHTTPRequestHandler):
-            # quiet: tests and embedded use don't want per-request stderr
-            def log_message(self, fmt, *args):  # noqa: A002
-                pass
+            tool_name: str | None = None  # the invoked tool, for the request log
 
-            def _send(self, code: int, payload: dict) -> None:
+            # http.server's own lines (access line, parse errors) go to
+            # this module's logger at DEBUG, never to stderr; the
+            # request line is _send's
+            def log_message(self, fmt, *args):  # noqa: A002
+                _log.debug(fmt, *args)
+
+            def _send(self, code: int, payload: dict, timing: dict | None = None) -> None:
+                """Serialize and write one response, logging the
+                request's one structured INFO line first: tool, status,
+                rows, the phase times in ``timing`` (validate / plan /
+                execute) and serialize."""
+                t = time.perf_counter()
                 body = json.dumps(payload).encode("utf-8")
+                if _log.isEnabledFor(logging.INFO):
+                    rec = {
+                        "method": self.command,
+                        "tool": self.tool_name,
+                        "status": code,
+                        "rows": payload.get("rowCount", 0),
+                        **(timing or {}),
+                        "serialize_ms": _ms(t),
+                    }
+                    _log.info("request %s", json.dumps(rec))
                 self.send_response(code)
                 self.send_header("Content-Type", "application/json")
                 self.send_header("Content-Length", str(len(body)))
@@ -109,6 +139,7 @@ class ToolGateway:
                 ):
                     self._send(404, {"error": f"no route {self.path!r}"})
                     return
+                self.tool_name = parts[2]
                 tool = gateway._find_tool(parts[2])
                 if tool is None:
                     self._send(404, {"error": f"unknown tool {parts[2]!r}"})
@@ -121,6 +152,7 @@ class ToolGateway:
                 except ValueError as exc:
                     self._send(400, {"error": f"bad request body: {exc}"})
                     return
+                t = time.perf_counter()
                 try:
                     # bind step alone (Tool.validate): ONLY genuine
                     # zero-trust rejections map to 400 — a TypeError
@@ -128,14 +160,19 @@ class ToolGateway:
                     # a server fault and stays a 500
                     tool.validate(**params)
                 except TypeError as exc:
-                    self._send(400, {"error": str(exc)})
+                    self._send(400, {"error": str(exc)}, {"validate_ms": _ms(t)})
                     return
+                timing = {"validate_ms": _ms(t)}
                 try:
+                    t = time.perf_counter()
                     df = tool.fn(gateway.spark, gateway.sf_dir, **params)
+                    timing["plan_ms"] = _ms(t)
+                    t = time.perf_counter()
                     rows = [
                         r.asDict(recursive=True)
                         for r in df.limit(gateway.row_cap).collect()
                     ]
+                    timing["execute_ms"] = _ms(t)
                 except Exception:  # noqa: BLE001 — plan/exec failure
                     # semantically invalid values that pass type checks
                     # (negative limits, analysis errors) surface from
@@ -145,9 +182,9 @@ class ToolGateway:
                     # names) stays in the server-side log, not on the
                     # wire of a zero-trust surface
                     _log.exception("tool %r failed", parts[2])
-                    self._send(500, {"error": "internal server error"})
+                    self._send(500, {"error": "internal server error"}, timing)
                     return
-                self._send(200, {"result": rows, "rowCount": len(rows)})
+                self._send(200, {"result": rows, "rowCount": len(rows)}, timing)
 
         self._server = ThreadingHTTPServer((host, port), Handler)
         self._thread: threading.Thread | None = None

@@ -12,6 +12,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's physical memory in whole GiB, at most 32g. A
+    heap cap above physical memory lets the heap grow until the kernel
+    OOM-kills the JVM (a 32g cap on a 16 GB machine died mid-run with
+    ~15 GB resident); half leaves room for the Python workers."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):  # no sysconf: keep 32g
+        return "32g"
+    return f"{max(1, min(32, phys // 2**31))}g"
+
+
 def get_session(app_name: str = "secure_agent_api_vector_search_spark",
                 cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession.
@@ -48,9 +60,15 @@ def get_session(app_name: str = "secure_agent_api_vector_search_spark",
         )
         # local mode runs driver + all executor threads in ONE JVM, so
         # this heap backs 32 concurrent tasks' shuffle/cache/UDF buffers;
-        # 8g GC-thrashed under the LSH band joins (2x run-to-run swings).
-        # On a real cluster this is spark.executor.memory territory.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        # 8g GC-thrashed under the LSH band joins at local[32] (2x
+        # run-to-run swings), hence 32g where the machine has 64 GB;
+        # smaller machines get half their memory ($SPARK_DRIVER_MEM
+        # overrides). On a real cluster this is spark.executor.memory
+        # territory.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         # ONE BLAS thread per Python worker: Spark already supplies the
         # task-level parallelism, and N workers × multi-threaded
         # OpenBLAS oversubscribes the cores with spin-waiting BLAS

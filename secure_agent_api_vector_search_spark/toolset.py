@@ -22,12 +22,22 @@ Tools are bound to the same engine paths the named-query catalog uses:
 `find_similar_customer_records` → driver-side query embed + exact
 cosine top-k (tools.yaml:13-27); `get_record_by_id` → typed point
 lookup (tools.yaml:28-38).
+
+Every tool reads one corpus store (:func:`_corpus`), kept per
+``sf_dir`` and corpus version like the reference's backfilled
+``abstract_embeddings`` column (sql/04_embeddings.sql): the documents
+relation, the corpus vectors embedded once and persisted, and the IVF
+index built lazily from those vectors. A warm call embeds only its
+query text (tools.yaml:24-26): exact search and the keyset page score
+the stored vectors, the ANN tool probes the stored index, the lookup
+filters the stored documents relation.
 """
 
 from __future__ import annotations
 
 import os
 import re
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -105,56 +115,24 @@ class Tool:
         return self.fn(spark, sf_dir, **params)
 
 
-def _find_similar(spark: SparkSession, sf_dir: str, query_text: str, limit: int) -> DataFrame:
-    docs = tables.load_documents(spark, sf_dir)
-    emb = docs.select(
-        F.col("doc_id").alias("vec_id"),
-        embedder.embed_udf(64)(F.col("text")).alias("embedding"),
-    )
-    return topk.find_similar_records(docs, emb, embedder.embed_text(query_text, 64), k=limit)
-
-
-def _find_similar_page(
-    spark: SparkSession,
-    sf_dir: str,
-    query_text: str,
-    limit: int,
-    after_score: float,
-    after_id: int,
-) -> DataFrame:
-    """Keyset-paginated U1: the page strictly after the
-    (after_score, after_id) cursor — page 1's last row, handed back by
-    the caller. Same projection as find_similar_customer_records, so a
-    client pages by swapping tools and threading the cursor."""
-    docs = tables.load_documents(spark, sf_dir)
-    # asNondeterministic: the keyset cursor filters on the similarity
-    # column derived from this UDF; without the marking Catalyst clones
-    # the embed into the extracted filter stage and the corpus embeds
-    # 4x per page request (measured: 4 ArrowEvalPython nodes -> 1)
-    emb = docs.select(
-        F.col("doc_id").alias("vec_id"),
-        embedder.embed_udf(64).asNondeterministic()(F.col("text")).alias("embedding"),
-    )
-    top = topk.topk_similar_after(
-        emb,
-        embedder.embed_text(query_text, 64),
-        last_score=float(after_score),
-        last_id=after_id,
-        k=limit,
-    )
-    return topk.join_back_documents(top, docs)
-
-
-_ANN_STORE: dict[str, tuple[str, object]] = {}  # sf_dir → (fingerprint, index)
+# sf_dir → (fingerprint, documents, vectors)
+_CORPUS_STORE: dict[str, tuple[str, DataFrame, DataFrame]] = {}
+# sf_dir → (fingerprint, index); perfbench/server.py reads entry[1]
+_ANN_STORE: dict[str, tuple[str, ivf.IvfIndex]] = {}
+_BUILD_LOCK = threading.RLock()  # store builds and drops
 
 
 def _corpus_fingerprint(sf_dir: str) -> str:
     """Cheap content-change detector for the documents corpus under
     ``sf_dir``: (relpath, size, mtime_ns) of every parquet file. Keys
-    the memoized ANN index so a rewritten corpus invalidates the store
-    instead of serving a stale index while the exact tool reads fresh
-    data (the advertised full-probe ≡ exact identity must hold)."""
-    path = os.path.join(sf_dir, "documents.parquet")
+    the corpus store so a rewritten corpus is re-read and re-embedded
+    instead of served stale. ``""`` means the corpus cannot be statted
+    locally (a non-local URI or a missing path): no change could be
+    detected, so such a corpus is never stored."""
+    local = sf_dir[len("file:"):] if sf_dir.startswith("file:") else sf_dir
+    if local.startswith("//"):  # file:///abs/path
+        local = local[2:]
+    path = os.path.join(local, "documents.parquet")
     parts: list[str] = []
     if os.path.isdir(path):
         for root, _dirs, files in os.walk(path):
@@ -168,14 +146,105 @@ def _corpus_fingerprint(sf_dir: str) -> str:
     return ";".join(parts)
 
 
-def invalidate_ann_store(sf_dir: str | None = None) -> None:
-    """Explicit rebuild hook: drop the memoized IVF index (and release
-    its persisted assignment frame) for one corpus dir, or all."""
-    keys = [sf_dir] if sf_dir is not None else list(_ANN_STORE)
-    for k in keys:
-        entry = _ANN_STORE.pop(k, None)
-        if entry is not None:
-            entry[1].assigned.unpersist()
+def _embed_corpus(docs: DataFrame) -> DataFrame:
+    return docs.select(
+        F.col("doc_id").alias("vec_id"),
+        embedder.embed_udf(64)(F.col("text")).alias("embedding"),
+    )
+
+
+def _corpus(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame, DataFrame]:
+    """(fingerprint, documents, vectors) of the corpus under ``sf_dir``
+    — the corpus store, the engine's stored embedding column (the
+    reference backfills ``abstract_embeddings`` once,
+    sql/04_embeddings.sql, and a tool call embeds only its query).
+
+    Built once per corpus version: the documents relation is loaded
+    once (file listing and schema resolved once, not persisted) and
+    the vectors are embedded once, persisted and materialized here, so
+    a warm call starts no Spark job before its collect. A changed
+    fingerprint drops the old entry (vectors and IVF index together)
+    and rebuilds; builds run under one lock, so concurrent first calls
+    build once. A corpus that cannot be statted locally bypasses the
+    store: read and embedded per call."""
+    fp = _corpus_fingerprint(sf_dir)
+    if not fp:
+        docs = tables.load_documents(spark, sf_dir)
+        return fp, docs, _embed_corpus(docs)
+    entry = _CORPUS_STORE.get(sf_dir)
+    if entry is None or entry[0] != fp:
+        with _BUILD_LOCK:
+            entry = _CORPUS_STORE.get(sf_dir)
+            if entry is None or entry[0] != fp:
+                invalidate_corpus_store(sf_dir)
+                docs = tables.load_documents(spark, sf_dir)
+                vectors = _embed_corpus(docs).persist()
+                vectors.count()
+                entry = _CORPUS_STORE[sf_dir] = (fp, docs, vectors)
+    return entry
+
+
+def _ann_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, ivf.IvfIndex]:
+    """(documents, IVF index) — the index built lazily from the stored
+    vectors, its assignment persisted, under the same lock and
+    fingerprint as the corpus store."""
+    fp, docs, vectors = _corpus(spark, sf_dir)
+    if not fp:
+        return docs, ivf.build_ivf(vectors, n_lists=16, seed=42)
+    entry = _ANN_STORE.get(sf_dir)
+    if entry is None or entry[0] != fp:
+        with _BUILD_LOCK:
+            entry = _ANN_STORE.get(sf_dir)
+            if entry is None or entry[0] != fp:
+                index = ivf.build_ivf(vectors, n_lists=16, seed=42)
+                index.assigned.persist().count()  # serve probes from a hot store
+                if entry is not None:  # built from a corpus version since replaced
+                    entry[1].assigned.unpersist()
+                entry = _ANN_STORE[sf_dir] = (fp, index)
+    return docs, entry[1]
+
+
+def invalidate_corpus_store(sf_dir: str | None = None) -> None:
+    """The drop hook: release one corpus dir's stored vectors and IVF
+    index together (both unpersisted), or every dir's."""
+    with _BUILD_LOCK:
+        everything = _CORPUS_STORE.keys() | _ANN_STORE.keys()
+        for k in [sf_dir] if sf_dir is not None else list(everything):
+            corpus = _CORPUS_STORE.pop(k, None)
+            if corpus is not None:
+                corpus[2].unpersist()
+            ann = _ANN_STORE.pop(k, None)
+            if ann is not None:
+                ann[1].assigned.unpersist()
+
+
+def _find_similar(spark: SparkSession, sf_dir: str, query_text: str, limit: int) -> DataFrame:
+    _fp, docs, vectors = _corpus(spark, sf_dir)
+    return topk.find_similar_records(docs, vectors, embedder.embed_text(query_text, 64), k=limit)
+
+
+def _find_similar_page(
+    spark: SparkSession,
+    sf_dir: str,
+    query_text: str,
+    limit: int,
+    after_score: float,
+    after_id: int,
+) -> DataFrame:
+    """Keyset-paginated U1: the page strictly after the
+    (after_score, after_id) cursor — page 1's last row, handed back by
+    the caller. Same projection as find_similar_customer_records, so a
+    client pages by swapping tools and threading the cursor. Page 2
+    reads the stored vectors but re-scores the whole corpus."""
+    _fp, docs, vectors = _corpus(spark, sf_dir)
+    top = topk.topk_similar_after(
+        vectors,
+        embedder.embed_text(query_text, 64),
+        last_score=float(after_score),
+        last_id=after_id,
+        k=limit,
+    )
+    return topk.join_back_documents(top, docs)
 
 
 def _find_similar_ann(
@@ -186,31 +255,18 @@ def _find_similar_ann(
     nprobe: int,
 ) -> DataFrame:
     """U1 through the V5 ANN path — README.md:51's "high-speed
-    similarity search" made literal: the corpus embeddings live in an
-    IVF store (built once per corpus and memoized, the index
-    lifecycle), the query probes only the ``nprobe`` nearest lists, and
-    the projection is byte-identical to find_similar_customer_records
-    (join_back_documents — the shared U1 contract). ``nprobe`` is the
+    similarity search" made literal: the IVF index is built once per
+    corpus version from the corpus store's vectors (the index
+    lifecycle; see :func:`_corpus`), the query probes only the
+    ``nprobe`` nearest lists, and the projection is byte-identical to
+    find_similar_customer_records (join_back_documents — the shared U1
+    contract). ``nprobe`` is the
     recall/latency knob: clamped to [1, n_lists]; at n_lists the answer
     is exactly the exact tool's (the gate-pinned full-probe identity).
     The exact tool stays the reference-faithful default (V6: the
     reference's own index routes L2 under a cosine query and is unused
     by its planner — here the approximate path is explicit opt-in)."""
-    docs = tables.load_documents(spark, sf_dir)
-    fp = _corpus_fingerprint(sf_dir)
-    cached = _ANN_STORE.get(sf_dir)
-    if cached is not None and cached[0] == fp:
-        index = cached[1]
-    else:
-        if cached is not None:  # corpus changed under us: release + rebuild
-            cached[1].assigned.unpersist()
-        emb = docs.select(
-            F.col("doc_id").alias("vec_id"),
-            embedder.embed_udf(64)(F.col("text")).alias("embedding"),
-        )
-        index = ivf.build_ivf(emb, n_lists=16, seed=42)
-        index.assigned.persist().count()  # serve probes from a hot store
-        _ANN_STORE[sf_dir] = (fp, index)
+    docs, index = _ann_index(spark, sf_dir)
     n_lists = len(index.centroids)
     top = ivf.ivf_search(
         index,
@@ -232,7 +288,7 @@ def _get_record(spark: SparkSession, sf_dir: str, record_id: str) -> DataFrame:
     a reference-side ``record_id = $1`` string compare would not). Any
     non-canonical id binds like any other unmatched VARCHAR value —
     0 rows, never an error and never interpolated SQL (U5)."""
-    docs = tables.load_documents(spark, sf_dir)
+    _fp, docs, _vectors = _corpus(spark, sf_dir)
     # canonical decimal AND inside int64 — a 20+-digit numeral is valid
     # for the reference's VARCHAR(25) ids but can never equal a bigint
     # key, so it binds 0 rows instead of overflowing F.lit (U5: never

@@ -178,3 +178,24 @@ def test_v3_ann_search_tool_over_socket(spark, sf_dir):
             {**q, "nprobe": "lots"},
         )
         assert code == 400 and "nprobe" in body["error"]
+
+
+def test_request_log_line_per_request(gateway, caplog):
+    """Every request logs ONE structured INFO line on the gateway's
+    logger: tool, status, rows and the ms of each phase it reached."""
+    import logging
+
+    logger = "secure_agent_api_vector_search_spark.gateway"
+    caplog.set_level(logging.INFO, logger=logger)
+    base = f"{gateway.url}/api/tool/get_record_by_id/invoke"
+    assert _post(base, {"record_id": "7"})[0] == 200
+    assert _post(base, {"record_id": 7})[0] == 400
+    lines = [r.getMessage() for r in caplog.records if r.name == logger]
+    assert len(lines) == 2 and all(line.startswith("request ") for line in lines)
+    ok, bad = (json.loads(line[len("request "):]) for line in lines)
+    assert ok["tool"] == bad["tool"] == "get_record_by_id"
+    assert (ok["status"], ok["rows"]) == (200, 1)
+    assert set(ok) >= {"validate_ms", "plan_ms", "execute_ms", "serialize_ms"}
+    assert all(ok[k] >= 0 for k in ("validate_ms", "plan_ms", "execute_ms", "serialize_ms"))
+    assert (bad["status"], bad["rows"]) == (400, 0)
+    assert "validate_ms" in bad and "plan_ms" not in bad and "execute_ms" not in bad

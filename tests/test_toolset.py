@@ -121,41 +121,157 @@ def test_v2_toolset_pagination_walks_without_gaps(spark, sf_dir):
              after_score="high", after_id=3)  # wrong type
 
 
-def test_paged_search_embeds_corpus_once(spark, sf_dir):
-    """The v2 paged tool derives similarity from the embed UDF and the
-    cursor filters on it: the executed plan must carry exactly TWO
-    ArrowEvalPython nodes — the corpus embed evaluated ONCE and the
-    one query scorer evaluated ONCE (see operators/topk.py). The
-    regression this guards: an UNMARKED embed UDF gets cloned by
-    Catalyst into the extracted filter stage and the corpus embeds
-    4x per page request (measured 4 nodes before the
-    asNondeterministic marking)."""
-    from secure_agent_api_vector_search_spark.toolset import _find_similar_page
+def _copy_corpus(sf_dir, dest) -> str:
+    """A fresh corpus dir holding ``sf_dir``'s documents — a corpus the
+    toolset store has never seen."""
+    import shutil
 
-    df = _find_similar_page(spark, sf_dir, "insurance claim water", 5, 0.5, 0)
-    df.collect()
+    dest.mkdir()
+    shutil.copy(f"{sf_dir}/documents.parquet", dest / "documents.parquet")
+    return str(dest)
+
+
+def _rewrite_corpus_text(sf_dir, corpus) -> None:
+    """Rewrite ``corpus``'s documents with every text moved to the next
+    doc_id: same ids and size, different answers."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{sf_dir}/documents.parquet")
+    texts = t.column("text").to_pylist()
+    t = t.set_column(
+        t.schema.get_field_index("text"), "text", pa.array(texts[-1:] + texts[:-1])
+    )
+    pq.write_table(t, f"{corpus}/documents.parquet")
+
+
+def _final_plan_outside_cache(df) -> str:
+    """The executed plan's final section minus every InMemoryRelation
+    subtree: the work a call does itself, not the stored frames' build
+    plans that Spark prints under the cache node."""
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # executed AQE plans print BOTH the final and the initial plan —
-    # count only the final section
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("ArrowEvalPython") == 2
+    kept, cache_depth = [], None
+    for line in plan.split("== Initial Plan ==")[0].splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cache_depth is not None and depth > cache_depth:
+            continue
+        cache_depth = depth if "InMemoryRelation" in line else None
+        if cache_depth is None:
+            kept.append(line)
+    return "\n".join(kept)
 
 
-def test_search_embeds_and_scores_corpus_once(spark, sf_dir):
-    """Page-1 twin of test_paged_search_embeds_corpus_once: the
-    find_similar_customer_records plan embeds the corpus once and
-    scores it once — both iterator UDFs chained in ONE ArrowEvalPython
-    node, so the embeddings never return to the JVM — under a
-    TakeOrderedAndProject top-k."""
+@pytest.fixture(scope="module")
+def stored_corpus(spark, sf_dir, tmp_path_factory):
+    """A corpus dir whose store is built (the cold first call)."""
     from secure_agent_api_vector_search_spark.toolset import _find_similar
 
-    df = _find_similar(spark, sf_dir, "insurance claim water", 5)
+    d = _copy_corpus(sf_dir, tmp_path_factory.mktemp("stored") / "corpus")
+    _find_similar(spark, d, "warm up", 3).collect()
+    return d
+
+
+def test_paged_search_embeds_corpus_once(spark, stored_corpus):
+    """A warm v2 page call embeds no corpus row and scores once: outside
+    the stored vectors' InMemoryRelation the plan holds exactly one
+    ArrowEvalPython node — the fold_query_scorer (``score(``) — and no
+    ``_embed(`` node; the keyset cursor filters that node's output."""
+    from secure_agent_api_vector_search_spark.toolset import _find_similar_page
+
+    df = _find_similar_page(spark, stored_corpus, "insurance claim water", 5, 0.5, 0)
     df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("ArrowEvalPython") == 1
-    assert final.count("_embed(") == 1 and final.count("score(") == 1
-    assert "TakeOrderedAndProject" in final
+    own = _final_plan_outside_cache(df)
+    assert "InMemoryTableScan" in own
+    assert own.count("ArrowEvalPython") == 1 and own.count("score(") == 1
+    assert "_embed(" not in own
+
+
+def test_search_embeds_and_scores_corpus_once(spark, stored_corpus):
+    """Page-1 twin of test_paged_search_embeds_corpus_once: a warm
+    find_similar_customer_records call embeds no corpus row and scores
+    the stored vectors once, under a TakeOrderedAndProject top-k."""
+    from secure_agent_api_vector_search_spark.toolset import _find_similar
+
+    df = _find_similar(spark, stored_corpus, "insurance claim water", 5)
+    df.collect()
+    own = _final_plan_outside_cache(df)
+    assert "InMemoryTableScan" in own
+    assert own.count("ArrowEvalPython") == 1 and own.count("score(") == 1
+    assert "_embed(" not in own
+    assert "TakeOrderedAndProject" in own
+
+
+def _answers(spark, d, q="water damage claim"):
+    """(search, page, ann at full probe, lookup) answers as plain rows."""
+    from secure_agent_api_vector_search_spark import toolset as T
+
+    def ids(df):
+        return [(r["doc_id"], r["similarity"]) for r in df.collect()]
+
+    search = ids(T._find_similar(spark, d, q, 6))
+    last_id, last_score = search[2]
+    return {
+        "search": search,
+        "page": ids(T._find_similar_page(spark, d, q, 3, last_score, last_id)),
+        "ann": ids(T._find_similar_ann(spark, d, q, 6, nprobe=16)),
+        "lookup": [r.asDict() for r in T._get_record(spark, d, "42").collect()],
+    }
+
+
+def test_concurrent_first_calls_build_store_once(spark, sf_dir, tmp_path, monkeypatch):
+    """Four threads make their first call (search, page, ANN, ANN) into
+    a fresh corpus at once: the corpus embedding and the IVF index are
+    each built once (the build lock), and every answer equals the
+    single-thread answer."""
+    import threading
+
+    from secure_agent_api_vector_search_spark import embedder
+    from secure_agent_api_vector_search_spark import toolset as T
+    from secure_agent_api_vector_search_spark.operators import ivf
+
+    d = _copy_corpus(sf_dir, tmp_path / "corpus")
+    q = "water damage claim"
+    calls = {
+        "search": lambda: T._find_similar(spark, d, q, 6),
+        "page": lambda: T._find_similar_page(spark, d, q, 3, 0.2, 0),
+        "ann": lambda: T._find_similar_ann(spark, d, q, 6, nprobe=16),
+    }
+    builds = {"embed_udf": 0, "build_ivf": 0}
+
+    def counted(owner, name):
+        fn = getattr(owner, name)
+
+        def wrapper(*a, **kw):
+            builds[name] += 1
+            return fn(*a, **kw)
+
+        monkeypatch.setattr(owner, name, wrapper)
+
+    counted(embedder, "embed_udf")
+    counted(ivf, "build_ivf")
+    order = ["search", "page", "ann", "ann"]
+    barrier = threading.Barrier(len(order))
+    got: dict = {}
+    errors: list = []
+
+    def run(i, tool):
+        try:
+            barrier.wait()
+            got[i] = [tuple(r) for r in calls[tool]().collect()]
+        except Exception as exc:  # noqa: BLE001 — surfaced below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=run, args=(i, t)) for i, t in enumerate(order)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    assert not errors, errors
+    assert builds == {"embed_udf": 1, "build_ivf": 1}
+    T.invalidate_corpus_store(d)
+    for i, tool in enumerate(order):
+        assert got[i] == [tuple(r) for r in calls[tool]().collect()], tool
+    T.invalidate_corpus_store(d)
 
 
 def test_toolset_import_loads_tool_modules():
@@ -181,34 +297,82 @@ def test_toolset_import_loads_tool_modules():
 
 
 def test_ann_store_invalidates_on_corpus_change(spark, sf_dir, tmp_path):
-    """The memoized IVF index is keyed on a corpus content fingerprint:
-    rewriting the parquet under the same dir must rebuild the index
-    (stale-index serving would silently break the advertised
-    nprobe=n_lists ≡ exact identity), and invalidate_ann_store is the
-    explicit drop hook."""
+    """The corpus store (vectors + IVF index) is keyed on a corpus
+    content fingerprint: rewriting the parquet under the same dir must
+    rebuild it — the exact search, the page tool and the ANN tool all
+    answer from the new text (a stale store would silently break the
+    nprobe=n_lists ≡ exact identity) — and invalidate_corpus_store is
+    the one drop hook, releasing the vectors and the index together."""
+    import os
     import shutil
 
     from secure_agent_api_vector_search_spark import toolset as T
 
-    corpus = tmp_path / "corpus"
-    corpus.mkdir()
     src = f"{sf_dir}/documents.parquet"
-    shutil.copy(src, corpus / "documents.parquet")
-    d = str(corpus)
+    d = _copy_corpus(sf_dir, tmp_path / "corpus")
 
-    T._find_similar_ann(spark, d, "water damage", 3, nprobe=16).collect()
+    before = _answers(spark, d)
     idx1 = T._ANN_STORE[d][1]
-    T._find_similar_ann(spark, d, "water damage", 3, nprobe=16).collect()
+    vectors1 = T._CORPUS_STORE[d][2]
+    assert _answers(spark, d) == before
     assert T._ANN_STORE[d][1] is idx1  # unchanged corpus → cache hit
+    assert T._CORPUS_STORE[d][2] is vectors1
 
     # rewrite the corpus file (same content, new mtime) → rebuild
-    shutil.copy(src, corpus / "documents.parquet")
-    import os
-
-    os.utime(corpus / "documents.parquet")
-    T._find_similar_ann(spark, d, "water damage", 3, nprobe=16).collect()
+    shutil.copy(src, f"{d}/documents.parquet")
+    os.utime(f"{d}/documents.parquet")
+    assert _answers(spark, d) == before
     assert T._ANN_STORE[d][1] is not idx1
+    assert not vectors1.is_cached  # the old version was released
 
-    T.invalidate_ann_store(d)
-    assert d not in T._ANN_STORE
-    T.invalidate_ann_store()  # idempotent full drop
+    # different text under the same ids → every tool's answer moves
+    _rewrite_corpus_text(sf_dir, d)
+    after = _answers(spark, d)
+    for tool in ("search", "page", "ann"):
+        assert after[tool] != before[tool], tool
+    assert after["ann"] == after["search"]  # full probe ≡ exact, fresh
+    assert after["lookup"][0]["text"] != before["lookup"][0]["text"]
+
+    vectors, index = T._CORPUS_STORE[d][2], T._ANN_STORE[d][1]
+    T.invalidate_corpus_store(d)
+    assert d not in T._CORPUS_STORE and d not in T._ANN_STORE
+    assert not vectors.is_cached and not index.assigned.is_cached
+    T.invalidate_corpus_store()  # idempotent full drop
+
+
+def test_store_follows_file_uri_corpus(spark, sf_dir, tmp_path):
+    """A ``file:`` sf_dir is statted like the plain path, so its store
+    is invalidated when the corpus is rewritten."""
+    from secure_agent_api_vector_search_spark import toolset as T
+
+    d = _copy_corpus(sf_dir, tmp_path / "corpus")
+    for uri in (f"file:{d}", f"file://{d}"):
+        assert T._corpus_fingerprint(uri) == T._corpus_fingerprint(d) != ""
+    uri = f"file://{d}"
+    before = _answers(spark, uri)
+    assert uri in T._CORPUS_STORE
+    _rewrite_corpus_text(sf_dir, d)
+    after = _answers(spark, uri)
+    for tool in ("search", "page", "ann", "lookup"):
+        assert after[tool] != before[tool], tool
+    T.invalidate_corpus_store(uri)
+
+
+def test_unstattable_corpus_bypasses_store(spark, sf_dir, tmp_path):
+    """A corpus that cannot be statted locally (here a glob Spark reads
+    but ``os`` cannot stat) has no fingerprint: the tools read and embed
+    it per call, store nothing, and never serve stale data."""
+    from secure_agent_api_vector_search_spark import toolset as T
+
+    d = _copy_corpus(sf_dir, tmp_path / "corpus")
+    glob = d[:-1] + "[s]"  # .../corpu[s] matches only .../corpus
+    assert T._corpus_fingerprint(glob) == ""
+    before = _answers(spark, glob)
+    assert before == _answers(spark, d)
+    assert glob not in T._CORPUS_STORE and glob not in T._ANN_STORE
+    _rewrite_corpus_text(sf_dir, d)
+    after = _answers(spark, glob)
+    for tool in ("search", "page", "ann", "lookup"):
+        assert after[tool] != before[tool], tool
+    assert after == _answers(spark, d)
+    T.invalidate_corpus_store(d)
