@@ -50,45 +50,10 @@ from secure_agent_api_vector_search_spark.embedder import DIM, embed_text, embed
 from secure_agent_api_vector_search_spark.functions import vector as VF
 from secure_agent_api_vector_search_spark.plans.registry import NamedQuery, Registry
 from secure_agent_api_vector_search_spark.sources.tables import (
-    estimate_scan_splits,
     load_documents,
     load_embeddings,
     rebalance_if_narrow,
 )
-
-
-def _docs_est(spark: SparkSession, sf_dir: str) -> int | None:
-    """Filesystem split estimate for the documents scan — feeds
-    rebalance_if_narrow's est_parts so the narrow check costs
-    microseconds instead of a ~170 ms df.rdd planning probe per query
-    construction (r13 VERDICT item 4)."""
-    return estimate_scan_splits(spark, f"{sf_dir}/documents.parquet")
-
-
-def _emb_est(spark: SparkSession, sf_dir: str) -> int | None:
-    return estimate_scan_splits(spark, f"{sf_dir}/embeddings.parquet")
-
-
-def _docs_rb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """load_documents + narrow-scan rebalance via the fs estimate."""
-    return rebalance_if_narrow(
-        load_documents(spark, sf_dir), est_parts=_docs_est(spark, sf_dir)
-    )
-
-
-def _post_rb(spark: SparkSession, est: int | None) -> int | None:
-    """Partition count a frame has AFTER rebalance_if_narrow(est): a
-    narrow scan was repartitioned up to defaultParallelism; a wide one
-    kept its splits. Feeds the est_parts of operators that re-check an
-    already-rebalanced input."""
-    if est is None:
-        return None
-    return max(est, spark.sparkContext.defaultParallelism)
-
-
-def _times(est: int | None, k: int) -> int | None:
-    """k unioned scans of the same source -> k x the splits."""
-    return None if est is None else k * est
 
 
 # ---------------------------------------------------------------------------
@@ -749,9 +714,7 @@ def dedup_near_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_components.py)."""
     docs = _docs_with_noisy_dups(spark, sf_dir)
     norm = docs.select("doc_id", TX.X.normalized_text("text").alias("text"))
-    pairs = D.minhash_near_dup_pairs(
-        norm, threshold=0.5, est_parts=_times(_docs_est(spark, sf_dir), 2)
-    )
+    pairs = D.minhash_near_dup_pairs(norm, threshold=0.5)
     return CC.keep_first(docs, pairs.select("id_a", "id_b"), id_col="doc_id").select(
         "doc_id"
     )
@@ -928,8 +891,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
     # materialize=False: the gate/bench call is one-shot — a per-call
     # persisted result would accumulate for the life of the session
-    out = bpe_encode_corpus(docs, n_merges=24, materialize=False,
-                            est_parts=_docs_est(spark, sf_dir))
+    out = bpe_encode_corpus(docs, n_merges=24, materialize=False)
     return out.select(
         "doc_id", "n_tokens", F.concat_ws(" ", F.col("ids")).alias("ids_str")
     )
@@ -950,8 +912,7 @@ def bpe_encode_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from secure_agent_api_vector_search_spark.operators.bpe import bpe_encode_corpus
 
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
-    out = bpe_encode_corpus(docs, n_merges=24, materialize=True,
-                            est_parts=_docs_est(spark, sf_dir))
+    out = bpe_encode_corpus(docs, n_merges=24, materialize=True)
     return out.select(
         "doc_id", "n_tokens", F.concat_ws(" ", F.col("ids")).alias("ids_str")
     )
@@ -1129,8 +1090,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_documents(spark, sf_dir)
     merges = train_bpe(docs.select("doc_id", "text"), n_merges=24)
-    return TF(docs, merges, group_col="source",
-              est_parts=_docs_est(spark, sf_dir))
+    return TF(docs, merges, group_col="source")
 
 
 def bpe_tokenize_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1148,8 +1108,7 @@ def bpe_tokenize_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
     merges = train_bpe(docs, n_merges=64)
-    return bpe_tokenize(docs, merges,
-                        est_parts=_docs_est(spark, sf_dir)).select(
+    return bpe_tokenize(docs, merges).select(
         "doc_id",
         "n_tokens",
         # the separator pins token BOUNDARIES: BPE is lossless, so an
@@ -1303,9 +1262,7 @@ def source_drift_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return CU.split_leakage_check(
-        load_documents(spark, sf_dir), est_parts=_docs_est(spark, sf_dir)
-    )
+    return CU.split_leakage_check(load_documents(spark, sf_dir))
 
 
 def build_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1737,9 +1694,7 @@ def ngram_lsh_vs_exact_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     also pinned in tests/test_dedup.py)."""
     corpus = _docs_with_appended_dups(spark, sf_dir)
     exact = D.ngram_jaccard_pairs(corpus, threshold=0.6)
-    lsh = D.ngram_jaccard_pairs_lsh(
-        corpus, threshold=0.6, est_parts=_times(_docs_est(spark, sf_dir), 2)
-    )
+    lsh = D.ngram_jaccard_pairs_lsh(corpus, threshold=0.6)
     return _pair_diff(exact, lsh, "jaccard")
 
 
@@ -1759,10 +1714,7 @@ def embedding_lsh_vs_exact_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall (adaptive banding) as hard gate rows."""
     corpus = _embeddings_with_near_dups(spark, sf_dir)
     exact = D.embedding_neardup_pairs(corpus, threshold=0.85, dim=DIM)
-    lsh = D.embedding_neardup_pairs_lsh(
-        corpus, threshold=0.85, dim=DIM,
-        est_parts=_times(_emb_est(spark, sf_dir), 2),
-    )
+    lsh = D.embedding_neardup_pairs_lsh(corpus, threshold=0.85, dim=DIM)
     return _pair_diff(exact, lsh, "cosine")
 
 
@@ -1776,13 +1728,8 @@ def textjoin_lsh_vs_exact_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.concat(F.col("text"), F.lit(" trailing audit note")).alias("text"),
     )
-    _de = _docs_est(spark, sf_dir)
-    exact = D.text_jaccard_join_exact(
-        qdocs, docs, threshold=0.5, est_parts_a=_de, est_parts_b=_de
-    )
-    lsh = D.minhash_similarity_join(
-        qdocs, docs, threshold=0.5, est_parts_a=_de, est_parts_b=_de
-    )
+    exact = D.text_jaccard_join_exact(qdocs, docs, threshold=0.5)
+    lsh = D.minhash_similarity_join(qdocs, docs, threshold=0.5)
     return _pair_diff(exact, lsh, "jaccard")
 
 
@@ -1792,18 +1739,13 @@ def minhash_vs_exact_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     every true pair sits at J ≥ 0.93 (measured), where 16-band/4-row
     recall is ≈1–0.25¹⁶ — the empty diff is deterministic for the fixed
     seed and corpus, same basis as the other LSH gates."""
-    docs = rebalance_if_narrow(
-        _docs_with_noisy_dups(spark, sf_dir),
-        # union of two documents scans -> twice the scan's splits
-        est_parts=_times(_docs_est(spark, sf_dir), 2),
-    ).select(
+    docs = rebalance_if_narrow(_docs_with_noisy_dups(spark, sf_dir)).select(
         "doc_id", TX.X.normalized_text("text").alias("text")
     )
-    _pe = _post_rb(spark, _times(_docs_est(spark, sf_dir), 2))
-    exact = D.text_jaccard_join_exact(
-        docs, docs, threshold=0.5, est_parts_a=_pe, est_parts_b=_pe
-    ).filter(F.col("id_a") < F.col("id_b"))
-    lsh = D.minhash_near_dup_pairs(docs, threshold=0.5, est_parts=_pe)
+    exact = D.text_jaccard_join_exact(docs, docs, threshold=0.5).filter(
+        F.col("id_a") < F.col("id_b")
+    )
+    lsh = D.minhash_near_dup_pairs(docs, threshold=0.5)
     return _pair_diff(exact, lsh, "jaccard")
 
 
@@ -1865,17 +1807,10 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # operator would only measure incidental background pairs.
     # rebalance BEFORE the normalize select: regexp folding over a
     # 2-split scan would otherwise run on 2 of 32 cores
-    docs = rebalance_if_narrow(
-        _docs_with_noisy_dups(spark, sf_dir),
-        # union of two documents scans -> twice the scan's splits
-        est_parts=_times(_docs_est(spark, sf_dir), 2),
-    ).select(
+    docs = rebalance_if_narrow(_docs_with_noisy_dups(spark, sf_dir)).select(
         "doc_id", TX.X.normalized_text("text").alias("text")
     )
-    return D.minhash_near_dup_pairs(
-        docs, threshold=0.5,
-        est_parts=_post_rb(spark, _times(_docs_est(spark, sf_dir), 2)),
-    )
+    return D.minhash_near_dup_pairs(docs, threshold=0.5)
 
 
 def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1915,8 +1850,7 @@ def ngram_jaccard_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≥0.95 overall with every planted dup recovered (pinned in
     tests/test_dedup.py::test_ngram_jaccard_lsh_matches_exact)."""
     return D.ngram_jaccard_pairs_lsh(
-        _docs_with_appended_dups(spark, sf_dir), threshold=0.6,
-        est_parts=_times(_docs_est(spark, sf_dir), 2),
+        _docs_with_appended_dups(spark, sf_dir), threshold=0.6
     )
 
 
@@ -1942,8 +1876,7 @@ def _embeddings_with_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.embedding_neardup_pairs_lsh(
-        _embeddings_with_near_dups(spark, sf_dir), threshold=0.85, dim=DIM,
-        est_parts=_times(_emb_est(spark, sf_dir), 2),
+        _embeddings_with_near_dups(spark, sf_dir), threshold=0.85, dim=DIM
     )
 
 
@@ -2076,10 +2009,7 @@ def similarity_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall vs the exact path is asserted in tests/test_dedup.py."""
     q = _query_vectors_perturbed(spark, sf_dir)
     emb = load_embeddings(spark, sf_dir)
-    return D.embedding_similarity_join(
-        q, emb, threshold=0.85, dim=DIM,
-        est_parts=_times(_emb_est(spark, sf_dir), 2),
-    )
+    return D.embedding_similarity_join(q, emb, threshold=0.85, dim=DIM)
 
 
 def text_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2091,10 +2021,7 @@ def text_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.concat(F.col("text"), F.lit(" trailing audit note")).alias("text"),
     )
-    _de = _docs_est(spark, sf_dir)
-    return D.minhash_similarity_join(
-        qdocs, docs, threshold=0.5, est_parts_a=_de, est_parts_b=_de
-    )
+    return D.minhash_similarity_join(qdocs, docs, threshold=0.5)
 
 
 def embed_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2128,7 +2055,7 @@ def image_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     header + raster with numpy → dimensions/luminance/thumbnail digest.
     rebalance first: both stages are Python map stages, and a 1-2-split
     parquet scan would pin them to 1-2 cores."""
-    docs = _docs_rb(spark, sf_dir)
+    docs = rebalance_if_narrow(load_documents(spark, sf_dir))
     # no trailing orderBy: a global sort after a map-only decode plan
     # re-executes the decode UDF in the range-sampling pass (2x decode)
     return M.image_features(M.synthetic_image_payloads(docs))
@@ -2140,7 +2067,7 @@ def image_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter reversal (operators/multimodal.py::decode_png, dispatched by
     the magic-sniffing decode_image) → the same feature projection as
     the netpbm path. Same map-only single-pass plan shape."""
-    docs = _docs_rb(spark, sf_dir)
+    docs = rebalance_if_narrow(load_documents(spark, sf_dir))
     return M.image_features(M.synthetic_png_payloads(docs))
 
 
@@ -2151,7 +2078,7 @@ def image_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the magic-sniffing decode_image) → the same feature projection
     as the netpbm/PNG/JPEG paths. GIF is lossless, so the gate needs no
     block-flat trick. Same map-only single-pass plan shape."""
-    docs = _docs_rb(spark, sf_dir)
+    docs = rebalance_if_narrow(load_documents(spark, sf_dir))
     return M.image_features(M.synthetic_gif_payloads(docs))
 
 
@@ -2163,7 +2090,7 @@ def image_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/bmp.py — interop-tested on the container's real
     python.bmp and idle.ico incl. its PNG-compressed entry) → the
     shared feature projection. Same map-only single-pass plan shape."""
-    docs = _docs_rb(spark, sf_dir)
+    docs = rebalance_if_narrow(load_documents(spark, sf_dir))
     return M.image_features(M.synthetic_bmp_payloads(docs))
 
 
@@ -2175,7 +2102,7 @@ def image_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/tiff.py — interop-tested on the container's real
     python.tiff) → the shared feature projection. Same map-only
     single-pass plan shape."""
-    docs = _docs_rb(spark, sf_dir)
+    docs = rebalance_if_narrow(load_documents(spark, sf_dir))
     return M.image_features(M.synthetic_tiff_payloads(docs))
 
 
@@ -2188,7 +2115,7 @@ def image_decode_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
     color cache, all four transforms), dispatched by the magic-
     sniffing decode_image, then the shared feature projection. Same
     map-only single-pass plan shape."""
-    docs = _docs_rb(spark, sf_dir)
+    docs = rebalance_if_narrow(load_documents(spark, sf_dir))
     return M.image_features(M.synthetic_webp_payloads(docs))
 
 
@@ -2201,7 +2128,7 @@ def image_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     accuracy is pinned in tests (PSNR bounds, real libjpeg-file
     interop). Same map-only single-pass plan as the other decode
     queries."""
-    docs = _docs_rb(spark, sf_dir)
+    docs = rebalance_if_narrow(load_documents(spark, sf_dir))
     return M.image_features(M.synthetic_jpeg_payloads(docs))
 
 
@@ -2222,7 +2149,7 @@ def media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     the synthesis+parse map once more (the 2x-decode trap the
     image_decode_* queries already avoid); the gate hash is
     order-insensitive."""
-    docs = _docs_rb(spark, sf_dir)
+    docs = rebalance_if_narrow(load_documents(spark, sf_dir))
     return M.media_metadata_rows(M.synthetic_media_payloads(docs))
 
 
@@ -2237,7 +2164,7 @@ def audio_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     same decide-what-to-decode first pass media_metadata gives images
     and video. No trailing orderBy (r13): same 2x-synthesis sampling
     trap as media_metadata; the gate hash is order-insensitive."""
-    docs = _docs_rb(spark, sf_dir)
+    docs = rebalance_if_narrow(load_documents(spark, sf_dir))
     return M.audio_metadata_rows(M.synthetic_audio_payloads(docs))
 
 
@@ -2250,7 +2177,7 @@ def media_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny-key hash aggregate; the groupBy keys have single-digit
     cardinality so the exchange is negligible."""
     rows = M.media_metadata_rows(M.synthetic_media_payloads(
-        _docs_rb(spark, sf_dir)))
+        rebalance_if_narrow(load_documents(spark, sf_dir))))
     return (
         rows.groupBy("format", "codec", "decodable")
         .agg(
@@ -2268,7 +2195,7 @@ def image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-encodes: each of the first 20 docs gets a noisy copy under
     id+700000 (a few pixels perturbed), so the aHash banding must
     recover exactly those pairs at tiny Hamming distance."""
-    docs = _docs_rb(spark, sf_dir)
+    docs = rebalance_if_narrow(load_documents(spark, sf_dir))
     payloads = M.synthetic_image_payloads(docs)
     # filter BELOW the generator: a filter above a mapInPandas barrier
     # cannot push through it, so the noisy branch would re-generate all
@@ -2284,7 +2211,7 @@ def video_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (planted mid-video scene cut) → per-frame netpbm decode →
     frame-sampling + luminance + shot-boundary counts. Same map-only
     single-pass plan shape as the image/audio decode queries."""
-    docs = _docs_rb(spark, sf_dir)
+    docs = rebalance_if_narrow(load_documents(spark, sf_dir))
     return M.video_features(M.synthetic_video_payloads(docs))
 
 
@@ -2296,7 +2223,7 @@ def video_frame_features_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     path. Block-flat fixture frames decode losslessly, so the gate is
     hard and codec-free on the oracle side. Same map-only single-pass
     plan shape."""
-    docs = _docs_rb(spark, sf_dir)
+    docs = rebalance_if_narrow(load_documents(spark, sf_dir))
     return M.video_features(M.synthetic_mjpeg_payloads(docs))
 
 
@@ -2310,7 +2237,7 @@ def video_frame_features_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
     Block-flat fixture frames decode losslessly, so the gate is hard
     and container-free on the oracle side. Same map-only single-pass
     plan shape."""
-    docs = _docs_rb(spark, sf_dir)
+    docs = rebalance_if_narrow(load_documents(spark, sf_dir))
     return M.video_features(M.synthetic_mp4_payloads(docs))
 
 
@@ -2322,7 +2249,7 @@ def video_frame_features_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/jpeg.py, then the shared frame features. Block-flat
     fixture frames decode losslessly, so the gate is container-free on
     the oracle side. Same map-only single-pass plan shape."""
-    docs = _docs_rb(spark, sf_dir)
+    docs = rebalance_if_narrow(load_documents(spark, sf_dir))
     return M.video_features(M.synthetic_avi_payloads(docs))
 
 
@@ -2332,7 +2259,7 @@ def audio_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/multimodal.py::_audio_feature_rows) →
     rate/duration/RMS/activity windows. rebalanced for the same reason
     as the image path."""
-    docs = _docs_rb(spark, sf_dir)
+    docs = rebalance_if_narrow(load_documents(spark, sf_dir))
     return M.audio_features(M.synthetic_wav_payloads(docs))
 
 
@@ -2376,7 +2303,7 @@ def audio_mp3_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame count / duration / mean bitrate / VBR flag. The classify-
     before-decode stage an audio corpus scan runs first; PCM decode
     stays the documented seam. Map-only single-pass plan shape."""
-    docs = _docs_rb(spark, sf_dir)
+    docs = rebalance_if_narrow(load_documents(spark, sf_dir))
     return M.mp3_stream_summary(M.synthetic_mp3_payloads(docs))
 
 
@@ -5387,10 +5314,11 @@ CHECK_FIRST: tuple[str, ...] = (
     # moved this round — the scorer zero-norm/ragged alignment
     # (vector_topk_page2 + every fold_normalize fit consumer), the
     # chunk_documents linear-explode rewrite, and every query whose
-    # construction now threads the filesystem scan-split estimate
-    # (est_parts) instead of the df.rdd planning probe — the
-    # rebalance decision is proven identical, and hash-identity in
-    # the official window is the proof the judge replays; (B) the
+    # narrow-scan rebalance decision is made without the df.rdd
+    # planning probe (since then read off the frame's own analyzed
+    # plan, sources/tables.py::planned_partitions) — the decision is
+    # pinned equal to the probe in tests/test_scan_split_estimate.py,
+    # and hash-identity in the official window is the proof; (B) the
     # stalest remaining coverage (last official record r10 — the
     # r9 backlog was fully rotated in r13); then the standing ANN
     # guard. Everything rotated out was green in r11-r13 and stays

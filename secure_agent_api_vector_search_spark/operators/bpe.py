@@ -286,7 +286,6 @@ def bpe_tokenize(
     merges: list[tuple[str, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    est_parts: int | None = None,
 ) -> DataFrame:
     """Tokenize with a learned merge table: per word, repeatedly apply
     the LOWEST-RANK applicable merge (canonical BPE inference). One
@@ -354,9 +353,7 @@ def bpe_tokenize(
         rebalance_if_narrow,
     )
 
-    return rebalance_if_narrow(
-        documents.select(id_col, text_col), est_parts=est_parts
-    ).mapInPandas(
+    return rebalance_if_narrow(documents.select(id_col, text_col)).mapInPandas(
         op, schema=f"{id_col} {id_type}, tokens array<string>, n_tokens long"
     )
 
@@ -388,7 +385,6 @@ def bpe_encode_corpus(
     batch_k: int = 1,
     min_count: int = 2,
     materialize: bool = True,
-    est_parts: int | None = None,
 ) -> DataFrame:
     """The composition a training pipeline actually ships to its
     loader: train the merge table on the corpus (:func:`train_bpe`),
@@ -424,8 +420,7 @@ def bpe_encode_corpus(
     merges = train_bpe(
         documents, n_merges, text_col=text_col, batch_k=batch_k, min_count=min_count
     )
-    toks = bpe_tokenize(documents, merges, text_col=text_col, id_col=id_col,
-                        est_parts=est_parts)
+    toks = bpe_tokenize(documents, merges, text_col=text_col, id_col=id_col)
     if materialize:
         toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
     vocab = bpe_vocab_ids(toks)
@@ -455,7 +450,6 @@ def tokenizer_fertility(
     merges: list[tuple[str, str]],
     group_col: str = "source",
     text_col: str = "text",
-    est_parts: int | None = None,
 ) -> DataFrame:
     """Tokenizer FERTILITY (subword tokens per word) by corpus slice —
     the standard tokenizer-quality metric: ~1 means the vocabulary
@@ -483,7 +477,6 @@ def tokenizer_fertility(
         merges,
         text_col=text_col,
         id_col=group_col,
-        est_parts=est_parts,
     )
     n_words = F.size(
         F.filter(F.col("tokens"), lambda t: t.endswith(_EOW))

@@ -811,7 +811,6 @@ def split_leakage_check(
     seed: str = "split-v1",
     via: str = "lsh",
     pairs: DataFrame | None = None,
-    est_parts: int | None = None,
 ) -> DataFrame:
     """Train/test LEAKAGE audit: near-duplicate pairs that CROSS the
     dataset-split boundary. :func:`contamination_check` asks "does a
@@ -906,7 +905,6 @@ def split_leakage_check(
             threshold=threshold,
             num_hashes=r_rows * n_bands,
             num_bands=n_bands,
-            est_parts=est_parts,
         )
     elif via == "exact":
         pairs = ngram_jaccard_pairs(

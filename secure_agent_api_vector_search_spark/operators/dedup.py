@@ -398,7 +398,6 @@ def minhash_near_dup_pairs(
     num_bands: int = 16,
     threshold: float = 0.5,
     seed: int = 42,
-    est_parts: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by MinHash-LSH with exact-Jaccard verify.
 
@@ -430,7 +429,7 @@ def minhash_near_dup_pairs(
     # UDF runs on 2 of N cores. Rebalance only in that case — at
     # cluster scale the scan splits per ~128 MB and this is a no-op.
     feats = (
-        rebalance_if_narrow(df, est_parts=est_parts)
+        rebalance_if_narrow(df)
         .select(
             F.col(id_col),
             _shingle_sig_udf(shingle_k, num_hashes, seed, num_bands)(F.col(text_col)).alias("_f"),
@@ -479,12 +478,11 @@ def minhash_near_dup_pairs(
     return _pair_order(pairs)
 
 
-def _minhash_side_feats(df, sig, text_col: str, id_col: str, side: int,
-                        est_parts: int | None = None):
+def _minhash_side_feats(df, sig, text_col: str, id_col: str, side: int):
     """Side-tagged (id, side, shingles, signature, bands) feature frame —
     the shared input shape of the two-frame screen."""
     return (
-        rebalance_if_narrow(df, est_parts=est_parts)
+        rebalance_if_narrow(df)
         .select(F.col(id_col), sig(F.col(text_col)).alias("_f"))
         .select(
             F.col(id_col).alias("id"),
@@ -529,8 +527,6 @@ def minhash_similarity_join(
     num_bands: int = 16,
     threshold: float = 0.5,
     seed: int = 42,
-    est_parts_a: int | None = None,
-    est_parts_b: int | None = None,
 ) -> DataFrame:
     """Two-frame approximate similarity join on text: pairs (a ∈ A,
     b ∈ B) with exact Jaccard ≥ threshold, candidates via shared LSH
@@ -553,10 +549,9 @@ def minhash_similarity_join(
 
     from pyspark import StorageLevel
 
-    fa = _minhash_side_feats(dfA, sig, text_col, id_col, 0,
-                             est_parts=est_parts_a).persist(StorageLevel.MEMORY_AND_DISK)
-    fb = _minhash_side_feats(dfB, sig, text_col, id_col, 1,
-                             est_parts=est_parts_b).persist(StorageLevel.MEMORY_AND_DISK)
+    level = StorageLevel.MEMORY_AND_DISK
+    fa = _minhash_side_feats(dfA, sig, text_col, id_col, 0).persist(level)
+    fb = _minhash_side_feats(dfB, sig, text_col, id_col, 1).persist(level)
     fa.count(), fb.count()  # one eager pass each: banding + verify both consume
     fa_ok = fa.filter(F.col("shingles").isNotNull())
     fb_ok = fb.filter(F.col("shingles").isNotNull())
@@ -758,7 +753,6 @@ def ngram_jaccard_pairs_lsh(
     num_bands: int = 16,
     seed: int = 42,
     materialize: bool = True,
-    est_parts: int | None = None,
 ) -> DataFrame:
     """Scale path for token-n-gram Jaccard: MinHash-LSH banding over the
     hashed gram sets for candidates, exact Jaccard verify on the true
@@ -798,7 +792,7 @@ def ngram_jaccard_pairs_lsh(
     # a 4.0 s wall). Same guard as minhash_near_dup_pairs; a no-op at
     # cluster scale where the scan splits per ~128 MB.
     grams = (
-        rebalance_if_narrow(df, est_parts=est_parts)
+        rebalance_if_narrow(df)
         .select(
             F.col(id_col),
             F.explode(F.array_distinct(X.token_shingles(text_col, n))).alias("_g"),
@@ -973,7 +967,6 @@ def _embedding_lsh_buckets(
     dim: int | None,
     flat: bool = False,
     flat_side_col: str | None = None,
-    est_parts: int | None = None,
 ) -> DataFrame | None:
     """(id, vec) → (id, vec, bands) via the sign-LSH sketch — or, with
     ``flat=True``, exploded (id, band_id, band_hash) rows (the pairs
@@ -1037,10 +1030,10 @@ def _embedding_lsh_buckets(
         if with_side:
             cols.append(F.col(flat_side_col).alias("_side"))
             schema += ", side int"
-        return rebalance_if_narrow(embeddings, est_parts=est_parts).select(
+        return rebalance_if_narrow(embeddings).select(
             *cols
         ).mapInPandas(flat_gen, schema)
-    sketched = rebalance_if_narrow(embeddings, est_parts=est_parts).select(
+    sketched = rebalance_if_narrow(embeddings).select(
         F.col(id_col), vec.alias(vec_col), sketch(vec).alias("_sk")
     )
     return sketched.select(
@@ -1326,7 +1319,6 @@ def embedding_neardup_pairs_lsh(
     target_recall: float = 0.95,
     seed: int = 42,
     dim: int | None = None,
-    est_parts: int | None = None,
 ) -> DataFrame:
     """Sign-LSH near-dup pairs: random-hyperplane bucketing, then exact
     cosine verify on bucket-colliding pairs only.
@@ -1367,7 +1359,7 @@ def embedding_neardup_pairs_lsh(
     """
     flat = _embedding_lsh_buckets(
         embeddings, threshold, id_col, vec_col, num_planes, num_tables,
-        target_recall, seed, dim, flat=True, est_parts=est_parts,
+        target_recall, seed, dim, flat=True,
     )
     if flat is None:
         # empty-path schema must agree with the non-empty path, so
@@ -1557,7 +1549,6 @@ def embedding_similarity_join(
     target_recall: float = 0.95,
     seed: int = 42,
     dim: int | None = None,
-    est_parts: int | None = None,
 ) -> DataFrame:
     """Two-frame semantic similarity join: pairs (a ∈ A, b ∈ B) with
     cosine ≥ threshold, candidates via shared sign-LSH buckets
@@ -1582,7 +1573,6 @@ def embedding_similarity_join(
     flat = _embedding_lsh_buckets(
         tagged, threshold, id_col, vec_col, num_planes, num_tables,
         target_recall, seed, dim, flat=True, flat_side_col="_tag_side",
-        est_parts=est_parts,
     )
     if flat is None:
         id_type = dfA.schema[id_col].dataType
@@ -1793,8 +1783,6 @@ def minhash_incremental(
     num_bands: int = 16,
     threshold: float = 0.5,
     seed: int = 42,
-    est_parts_batch: int | None = None,
-    est_parts_seen: int | None = None,
 ) -> DataFrame:
     """Incremental NEAR-dup dedup: the MinHash completion of
     :func:`dedup_incremental` — keep the batch rows whose Jaccard
@@ -1830,14 +1818,9 @@ def minhash_incremental(
 
     sig = _shingle_sig_udf(shingle_k, num_hashes, seed, num_bands)
 
-    fb = _minhash_side_feats(batch, sig, text_col, id_col, 0,
-                             est_parts=est_parts_batch).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    fs = _minhash_side_feats(seen, sig, text_col, id_col, 1,
-                             est_parts=est_parts_seen).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    level = StorageLevel.MEMORY_AND_DISK
+    fb = _minhash_side_feats(batch, sig, text_col, id_col, 0).persist(level)
+    fs = _minhash_side_feats(seen, sig, text_col, id_col, 1).persist(level)
     try:
         fb.count(), fs.count()  # one eager pass each; both stages consume
         b_ok = fb.filter(F.col("shingles").isNotNull())
@@ -1888,8 +1871,6 @@ def text_jaccard_join_exact(
     threshold: float = 0.5,
     seed: int = 42,
     via: str = "cross",
-    est_parts_a: int | None = None,
-    est_parts_b: int | None = None,
 ) -> DataFrame:
     """Exact two-frame text Jaccard join — the ground-truth twin of
     :func:`minhash_similarity_join`.
@@ -1920,17 +1901,16 @@ def text_jaccard_join_exact(
         raise ValueError("threshold must be > 0")
     sig = _shingle_sig_udf(shingle_k, 1, seed, 0)
 
-    def feats(df: DataFrame, out_id: str, out_sh: str,
-              est_parts: int | None) -> DataFrame:
+    def feats(df: DataFrame, out_id: str, out_sh: str) -> DataFrame:
         return (
-            rebalance_if_narrow(df, est_parts=est_parts)
+            rebalance_if_narrow(df)
             .select(F.col(id_col).alias(out_id), sig(F.col(text_col)).alias("_f"))
             .select(out_id, F.col("_f.shingles").alias(out_sh))
             .filter(F.col(out_sh).isNotNull())
         )
 
-    fa = feats(dfA, "id_a", "sh_a", est_parts_a)
-    fb = feats(dfB, "id_b", "sh_b", est_parts_b)
+    fa = feats(dfA, "id_a", "sh_a")
+    fb = feats(dfB, "id_b", "sh_b")
     if via == "cross":
         joined = fb.crossJoin(F.broadcast(fa))
     elif via == "index":

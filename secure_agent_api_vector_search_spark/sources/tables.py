@@ -9,6 +9,11 @@ to the parquet-embedded schema; we validate rather than re-declare.
 At 100 TB these reads are the scan layer: parquet row-group statistics
 give min/max skipping, and any `filter`/`select` applied downstream is
 pushed into the scan (verify with `df.explain` → `PushedFilters`).
+
+The narrow-scan rebalance (:func:`rebalance_if_narrow`) owns its
+decision: it reads a frame's partition count off the frame's analyzed
+plan, packing file splits the way Spark does, so no caller passes an
+estimate down.
 """
 
 from __future__ import annotations
@@ -73,121 +78,99 @@ def load_embeddings(spark: SparkSession, sf_dir: str, as_double: bool = True) ->
     return df
 
 
-# Memo for the filesystem split estimate, keyed on the file listing
-# signature (paths + sizes + mtimes) and the three split confs — plan
-# METADATA, never results: the same inputs at the same confs always
-# split the same way, and any data rewrite changes the signature
-# (VERDICT r13 item 4 sanctions exactly this memo).
-_SPLIT_EST_MEMO: dict[tuple, int] = {}
+# Plan nodes that keep their child's partitions one for one.
+_NARROW_NODES = frozenset({"Project", "Filter", "SubqueryAlias", "Generate"})
 
 
-def _listing_signature(path: str) -> tuple | None:
-    """(path, size, mtime_ns) per data file under ``path`` (a parquet
-    file or directory; hidden/_metadata entries skipped), or None when
-    the path cannot be statted locally (remote FS → caller falls back
-    to the Spark-side probe)."""
-    import os
+def planned_partitions(df: DataFrame) -> int | None:
+    """How many partitions ``df`` will run with, read off its already
+    analyzed logical plan (neither the optimizer nor the planner runs).
 
-    try:
-        st = os.stat(path)
-        if not os.path.isdir(path):
-            return ((path, st.st_size, st.st_mtime_ns),)
-        out = []
-        for entry in sorted(os.scandir(path), key=lambda e: e.name):
-            if entry.name.startswith(("_", ".")) or not entry.is_file():
-                continue
-            es = entry.stat()
-            out.append((entry.path, es.st_size, es.st_mtime_ns))
-        return tuple(out)
-    except OSError:
+    Narrow nodes keep their child's count, a ``Union`` sums its
+    children, a round-robin ``repartition(n)`` gives ``n``, and a plain
+    parquet scan gives Spark's own split packing of its file listing
+    (:func:`_file_scan_partitions`). Any other node (aggregates, joins,
+    ``Range``, local relations, JDBC, other file formats, partitioned
+    or bucketed tables) gives None: the count is then only known by
+    planning the frame."""
+    return _node_partitions(
+        df._jdf.queryExecution().analyzed(), df._jdf.sparkSession()
+    )
+
+
+def _node_partitions(node, jss, in_union: bool = False) -> int | None:
+    name = node.nodeName()
+    if name in _NARROW_NODES:
+        return _node_partitions(node.child(), jss, in_union)
+    if name == "Union":
+        kids = node.children()
+        counts = [
+            _node_partitions(kids.apply(i), jss, True) for i in range(kids.length())
+        ]
+        return None if None in counts else sum(counts)
+    if name == "Repartition":
+        # Union children that share one reused exchange are zipped, not
+        # summed, so a shuffle under a Union is left to the probe
+        return node.numPartitions() if node.shuffle() and not in_union else None
+    if name == "LogicalRelation":
+        return _file_scan_partitions(node.relation(), jss)
+    return None
+
+
+def _file_scan_partitions(rel, jss) -> int | None:
+    """Splits of a non-partitioned, non-bucketed parquet relation (a
+    parquet file splits at any byte offset), packed the way
+    ``FileSourceScanExec`` does (``FilePartition.maxSplitBytes`` and
+    ``getFilePartitions``), with the split confs read through SQLConf's
+    typed getters so every spelling Spark accepts parses as Spark
+    parses it."""
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+        or rel.partitionSchema().nonEmpty()
+        or rel.bucketSpec().isDefined()
+    ):
         return None
-
-
-def estimate_scan_splits(spark: SparkSession, *paths: str) -> int | None:
-    """Estimated partition count of a parquet scan over ``paths``,
-    computed from the LOCAL file listing with Spark's own
-    FilePartition packing math (FilePartition.maxSplitBytes +
-    sequential packing, charging openCostInBytes per file) — zero py4j
-    round trips, so the narrow-scan check costs microseconds instead
-    of the ~170 ms physical-planning probe ``df.rdd`` pays on every
-    query construction (~27 hot call sites, r13 VERDICT item 4).
-
-    Returns None when a path cannot be statted locally (e.g. a remote
-    filesystem URI) — callers then fall back to the probe. The
-    estimate is used ONLY to decide whether to round-robin repartition
-    a small scan; a wrong estimate changes no values (repartition is
-    row-preserving and every consumer is key- or row-wise)."""
-    sigs = []
-    for p in paths:
-        s = _listing_signature(p.removeprefix("file:"))
-        if s is None:
-            return None
-        sigs.append(s)
-    conf = spark.conf
-    max_pb = _bytes_conf(conf, "spark.sql.files.maxPartitionBytes", 128 << 20)
-    open_cost = _bytes_conf(conf, "spark.sql.files.openCostInBytes", 4 << 20)
-    min_pn = conf.get("spark.sql.files.minPartitionNum", None)
-    min_parts = int(min_pn) if min_pn else spark.sparkContext.defaultParallelism
-    key = (tuple(sigs), max_pb, open_cost, min_parts)
-    got = _SPLIT_EST_MEMO.get(key)
-    if got is not None:
-        return got
-    total = 0
-    sizes: list[int] = []
-    for sig in sigs:
-        for _, size, _ in sig:
-            if size <= 0:
-                continue
-            sizes.append(size)
-            total += size + open_cost
-    if not sizes:
-        return 1
-    bytes_per_core = total // max(min_parts, 1)
-    max_split = min(max_pb, max(open_cost, bytes_per_core))
-    # split each (splittable parquet) file at max_split, then pack
-    # splits sequentially, charging open_cost per split, closing a
-    # partition when it would overflow max_split — Spark's
-    # FilePartition.getFilePartitions
-    splits: list[int] = []
-    for size in sorted(sizes, reverse=True):
-        off = 0
-        while off < size:
-            splits.append(min(max_split, size - off))
-            off += max_split
-    n, cur = 0, 0
-    for s in splits:
-        if cur + s + open_cost > max_split and cur > 0:
-            n += 1
-            cur = 0
-        cur += s + open_cost
-    if cur > 0:
-        n += 1
-    _SPLIT_EST_MEMO[key] = n
+    conf = jss.sessionState().conf()
+    max_bytes = conf.filesMaxPartitionBytes()
+    open_cost = conf.filesOpenCostInBytes()
+    min_num = conf.filesMinPartitionNum()
+    min_num = min_num.get() if min_num.isDefined() else jss.leafNodeDefaultParallelism()
+    listing = rel.location().allFiles()
+    sizes = [listing.apply(i).getLen() for i in range(listing.length())]
+    sizes = [size for size in sizes if size > 0]
+    total = sum(size + open_cost for size in sizes)
+    max_split = min(max_bytes, max(open_cost, total // min_num))
+    # cut every file at max_split, then sort all splits largest first
+    splits = sorted(
+        (min(max_split, size - off) for size in sizes
+         for off in range(0, size, max_split)),
+        reverse=True,
+    )
+    n = _pack(splits, max_split, open_cost)
+    max_num = conf.filesMaxPartitionNum()
+    if max_num.isDefined() and n > max_num.get():
+        # Spark re-packs the same splits into at most maxPartitionNum
+        total = sum(s + open_cost for s in splits)
+        n = _pack(splits, -(-total // max_num.get()), open_cost)
     return n
 
 
-def _bytes_conf(conf, key: str, default: int) -> int:
-    """Parse a Spark byte-size conf value ('134217728', '134217728b',
-    '128m', '4MB')."""
-    raw = conf.get(key, None)
-    if raw is None:
-        return default
-    s = str(raw).strip().lower().removesuffix("b")
-    mult = 1
-    for suf, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if s.endswith(suf):
-            s = s[:-1]
-            mult = m
-            break
-    try:
-        return int(float(s)) * mult
-    except ValueError:
-        return default
+def _pack(splits: list[int], max_split: int, open_cost: int) -> int:
+    """Partitions ``FilePartition.getFilePartitions`` makes of
+    ``splits`` (sorted descending): next-fit, closing a partition when
+    the next split would overflow ``max_split``; the open cost is
+    charged once a split is added."""
+    n, cur = 0, 0
+    for s in splits:
+        if cur and cur + s > max_split:
+            n += 1
+            cur = 0
+        cur += s + open_cost
+    return n + (1 if cur else 0)
 
 
-def rebalance_if_narrow(
-    df: DataFrame, min_parts: int | None = None, est_parts: int | None = None
-) -> DataFrame:
+def rebalance_if_narrow(df: DataFrame) -> DataFrame:
     """Round-robin repartition when the scan under-splits, so a
     CPU-heavy map stage (Pandas-UDF signature/sketch/embed) gets full
     parallelism.
@@ -200,16 +183,16 @@ def rebalance_if_narrow(
     one split per ~128 MB and this is a no-op, so the shuffle cost is
     bounded by exactly the small-input case that needs it.
 
-    ``est_parts`` (r14, VERDICT r13 item 4): the caller's
-    :func:`estimate_scan_splits` number for the frame's underlying
-    scan(s). When supplied, the ~170 ms-per-call ``df.rdd``
-    physical-planning probe is skipped entirely — the decision (narrow
-    vs not) is the same, because narrow transforms preserve the scan's
-    partition count and a union's count is the sum of its inputs'.
+    The partition count comes from the frame's own plan
+    (:func:`planned_partitions`, a few ms); only a frame the plan walk
+    cannot count (e.g. one after an aggregate) pays the ``df.rdd``
+    probe, which plans the frame and, under AQE, runs the shuffle
+    stages below it.
     """
-    if min_parts is None:
-        min_parts = df.sparkSession.sparkContext.defaultParallelism
-    n = est_parts if est_parts is not None else df.rdd.getNumPartitions()
+    min_parts = df.sparkSession.sparkContext.defaultParallelism
+    n = planned_partitions(df)
+    if n is None:
+        n = df.rdd.getNumPartitions()
     if n < min_parts:
         return df.repartition(min_parts)
     return df
