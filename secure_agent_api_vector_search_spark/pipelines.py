@@ -22,7 +22,7 @@ write; the embedding UDF is the only Python stage (Arrow-batched).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from secure_agent_api_vector_search_spark.embedder import embed_udf
@@ -374,6 +374,12 @@ def curate_corpus(
     dedup-dropped / contaminated counts, plus per-split sizes).
     Rejected-stage outputs land under ``{out_dir}/rejects/<stage>`` so
     every dropped row stays queryable.
+
+    Each stage is materialized exactly once, as an eager
+    ``localCheckpoint`` that also cuts the lineage, and every audit
+    count is a metric observed on that checkpoint or on a parquet
+    write that runs anyway; reject paths are written from the
+    checkpointed frames.
     """
     from secure_agent_api_vector_search_spark.functions import text as X
     from secure_agent_api_vector_search_spark.operators import dedup as D
@@ -388,25 +394,38 @@ def curate_corpus(
     )
 
     counts: dict[str, int] = {}
+    every = F.lit(True)
+
+    def run(df: DataFrame, path: str | None = None, **counted: Column) -> DataFrame:
+        """Run ``df``'s one action — the parquet write to ``path``, else
+        an eager local checkpoint — counting the rows that meet each
+        ``counted`` condition on that same pass (``obs.get`` waits for
+        the action, so an Observation goes only where one runs here)."""
+        obs = Observation()
+        if counted:
+            df = df.observe(obs, *[F.count(F.when(c, 1)).alias(k) for k, c in counted.items()])
+        if path is None:
+            df = df.localCheckpoint()
+        else:
+            df.write.mode("overwrite").parquet(f"{out_dir}/{path}")
+        counts.update(obs.get if counted else {})
+        return df
+
     docs, quarantine = load_jsonl_documents(spark, raw_jsonl)
-    docs = docs.persist()
-    quarantine = quarantine.persist()  # counted AND written: one parse
-    counts["ingested"] = docs.count()
-    counts["quarantined"] = quarantine.count()
-    quarantine.write.mode("overwrite").parquet(f"{out_dir}/rejects/parse")
+    docs = run(docs, ingested=every)
+    run(quarantine, "rejects/parse", quarantined=every)
 
     if expectations:
         from secure_agent_api_vector_search_spark.operators.expectations import (
             check_expectations,
         )
 
-        report = check_expectations(docs, expectations).persist()
-        report.write.mode("overwrite").parquet(f"{out_dir}/expectations")
+        report = run(check_expectations(docs, expectations))
+        run(report, "expectations")
         failed = [
             r["rule"] for r in report.collect()
             if r["rule"] != "_rows" and not r["passed"]
         ]
-        report.unpersist()
         counts["expectations_failed"] = len(failed)
         if failed:
             # a broken drop must stop BEFORE anything expensive runs —
@@ -421,27 +440,17 @@ def curate_corpus(
             html_extract,
         )
 
-        rewritten = _rejoin_rewritten(
-            docs, html_extract(docs), "extracted_text"
-        ).persist()
-        docs = rewritten.filter(
-            F.col("link_density") <= max_link_density
-        ).drop("link_density").persist()
-        counts["after_html_extract"] = docs.count()
+        linky = F.col("link_density") > max_link_density
+        rewritten = run(_rejoin_rewritten(docs, html_extract(docs), "extracted_text"),
+                        after_html_extract=~linky)
         counts["link_density_dropped"] = counts["ingested"] - counts["after_html_extract"]
-        rewritten.filter(F.col("link_density") > max_link_density).drop(
-            "link_density"
-        ).write.mode("overwrite").parquet(f"{out_dir}/rejects/link_density")
-        rewritten.unpersist()
+        run(rewritten.filter(linky).drop("link_density"), "rejects/link_density")
+        docs = rewritten.filter(~linky).drop("link_density")
 
-    gated = docs.filter(
-        (X.token_count("text") >= min_tokens)
-        & (X.quality_score("text") >= min_quality)
-    ).persist()
-    counts["after_quality"] = gated.count()
-    docs.join(gated.select("doc_id"), "doc_id", "left_anti").write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/rejects/quality")
+    gated = run(docs.filter((X.token_count("text") >= min_tokens)
+                            & (X.quality_score("text") >= min_quality)),
+                after_quality=every)
+    run(docs.join(gated.select("doc_id"), "doc_id", "left_anti"), "rejects/quality")
 
     # exact/normalized dedup: keep-min-id per normalized fingerprint —
     # the combiner-safe groupBy form (operators/dedup.py), NOT a window
@@ -453,64 +462,47 @@ def curate_corpus(
     norm = exact_kept.select("doc_id", X.normalized_text("text").alias("text"))
     pairs = D.minhash_near_dup_pairs(norm, threshold=near_dup_threshold)
     if leakage_audit:
-        # the audit reuses this exact pair frame (pairs=); without a
-        # persist it would re-run the band join + verify from the
-        # operator's cached signatures (~10× the O(pairs) audit cost)
-        pairs = pairs.persist()
-    deduped = keep_first(exact_kept, pairs.select("id_a", "id_b"), id_col="doc_id")
-    deduped = deduped.persist()
-    counts["after_dedup"] = deduped.count()
-    gated.join(deduped.select("doc_id"), "doc_id", "left_anti").write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/rejects/dedup")
+        # the audit reuses this exact pair frame (pairs=): checkpointed,
+        # the band join + verify runs once for both consumers
+        pairs = run(pairs)
+    deduped = run(keep_first(exact_kept, pairs.select("id_a", "id_b"), id_col="doc_id"),
+                  after_dedup=every)
+    run(gated.join(deduped.select("doc_id"), "doc_id", "left_anti"), "rejects/dedup")
 
     if strip_spans_k is not None:
         from secure_agent_api_vector_search_spark.operators.substr import (
             strip_dup_spans,
         )
 
-        stripped = strip_dup_spans(deduped, k=strip_spans_k)
-        rejoined = _rejoin_rewritten(
-            deduped, stripped.withColumnRenamed("text", "_new_text"), "_new_text"
-        ).persist()
-        kept_after_strip = rejoined.filter(F.col("text") != "")
-        counts["span_emptied"] = rejoined.filter(F.col("text") == "").count()
-        # changed-but-kept rows (boilerplate removed, doc retained)
-        counts["span_stripped_docs"] = (
-            kept_after_strip.join(
-                deduped.select("doc_id", F.col("text").alias("_old")), "doc_id"
-            )
-            .filter(F.col("text") != F.col("_old"))
-            .count()
-        )
-        rejoined.filter(F.col("text") == "").write.mode("overwrite").parquet(
-            f"{out_dir}/rejects/span_empty"
-        )
-        prev = deduped
-        deduped = kept_after_strip.persist()
-        counts["after_span_strip"] = deduped.count()
-        prev.unpersist()
-        rejoined.unpersist()
+        # one observed pass over the rejoin while it still sees the old
+        # text: emptied, changed-but-kept (boilerplate removed, doc
+        # retained) and kept documents
+        text = F.col("text")
+        stripped = strip_dup_spans(deduped, k=strip_spans_k).withColumnRenamed("text", "_new")
+        rejoined = run(
+            _rejoin_rewritten(deduped.withColumn("_old", text), stripped, "_new")
+            .withColumn("_stripped", text != F.col("_old")).drop("_old"),
+            span_emptied=text == "",
+            span_stripped_docs=(text != "") & F.col("_stripped"),
+            after_span_strip=text != "",
+        ).drop("_stripped")
+        run(rejoined.filter(text == ""), "rejects/span_empty")
+        deduped = rejoined.filter(text != "")
 
     # the eval slice (doc_id < eval_max_id) is RESERVED, not dropped:
     # it is the benchmark the decontamination pass protects, so it
     # leaves the training pipeline here — written and counted so the
     # stage arithmetic closes (after_dedup = eval_reserved +
     # contaminated + after_decontamination)
-    eval_reserved = deduped.filter(F.col("doc_id") < eval_max_id)
-    counts["eval_reserved"] = eval_reserved.count()
-    eval_reserved.write.mode("overwrite").parquet(f"{out_dir}/eval_reserved")
+    run(deduped.filter(F.col("doc_id") < eval_max_id), "eval_reserved", eval_reserved=every)
 
     # benchmark decontamination: drop training docs with heavy eval overlap
     overlap = contamination_check(deduped, eval_max_id=eval_max_id)
     dirty = overlap.filter(F.col("hit_frac") > max_contamination).select("doc_id")
     train_pool = deduped.filter(F.col("doc_id") >= eval_max_id)
-    clean = train_pool.join(dirty, "doc_id", "left_anti")
-    clean = clean.persist()
-    counts["after_decontamination"] = clean.count()
-    train_pool.join(clean.select("doc_id"), "doc_id", "left_anti").write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/rejects/contamination")
+    clean = run(train_pool.join(dirty, "doc_id", "left_anti"), after_decontamination=every)
+    run(train_pool.join(clean.select("doc_id"), "doc_id", "left_anti"),
+        "rejects/contamination")
 
     if lm_tail_filter:
         from secure_agent_api_vector_search_spark.operators.curation import (
@@ -520,20 +512,11 @@ def curate_corpus(
         buckets = lm_likelihood_buckets(clean, lm_source=lm_source).select(
             "doc_id", "bucket"
         )
-        kept_lm = clean.join(
-            buckets.filter(F.col("bucket") != "tail").select("doc_id"), "doc_id"
-        ).persist()
-        counts["after_lm_filter"] = kept_lm.count()
-        clean.join(kept_lm.select("doc_id"), "doc_id", "left_anti").write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/rejects/lm_tail")
-        prev_clean = clean
+        kept_lm = run(clean.join(buckets.filter(F.col("bucket") != "tail").select("doc_id"),
+                                 "doc_id"),
+                      after_lm_filter=every)
+        run(clean.join(kept_lm.select("doc_id"), "doc_id", "left_anti"), "rejects/lm_tail")
         clean = kept_lm
-        prev_clean.unpersist()
-
-    split = clean.join(
-        dataset_split(clean).select("doc_id", "split"), "doc_id"
-    ).persist()  # consumed by three count+write passes
 
     if leakage_audit:
         from secure_agent_api_vector_search_spark.operators.curation import (
@@ -543,7 +526,7 @@ def curate_corpus(
         # AMORTIZED audit: reuse the verified near-dup pair frame the
         # dedup stage already computed (pairs=) instead of rebuilding
         # the banded pairs — the audit is O(pairs), sub-second. Same
-        # default seed as the dataset_split above, so the audited
+        # default seed as the dataset_split below, so the audited
         # split IS the shipped split. Over dedup's own pair frame this
         # is the pipeline's no-leakage POSTCONDITION: keep_first drops
         # one member of every pair, so a nonzero count means the
@@ -553,13 +536,8 @@ def curate_corpus(
         import time as _time
 
         _t0 = _time.perf_counter()
-        leaks = split_leakage_check(
-            clean, threshold=near_dup_threshold, pairs=pairs
-        )
-        leaks.write.mode("overwrite").parquet(f"{out_dir}/leakage_audit")
-        counts["leakage_pairs"] = spark.read.parquet(
-            f"{out_dir}/leakage_audit"
-        ).count()
+        run(split_leakage_check(clean, threshold=near_dup_threshold, pairs=pairs),
+            "leakage_audit", leakage_pairs=every)
         if stage_seconds is not None:
             # in-pipeline audit cost: with pairs= supplied this is a
             # filter + two split joins, NOT a banded rebuild — the
@@ -567,19 +545,20 @@ def curate_corpus(
             stage_seconds["leakage_audit"] = round(
                 _time.perf_counter() - _t0, 3
             )
+
+    # split sizes are observed on the split's checkpoint: write_epoch_shards
+    # reads the train frame twice (epoch order + payload join)
+    part = F.col("split")
+    split = run(clean.join(dataset_split(clean).select("doc_id", "split"), "doc_id"),
+                split_train=part == "train", split_val=part == "val",
+                split_test=part == "test")
     for name in ("train", "val", "test"):
-        part = split.filter(F.col("split") == name).drop("split")
-        counts[f"split_{name}"] = part.count()
+        rows = split.filter(part == name).drop("split")
         if name == "train":
             write_epoch_shards(
-                part, f"{out_dir}/train_shards", n_shards=n_shards,
+                rows, f"{out_dir}/train_shards", n_shards=n_shards,
                 seed=epoch_seed,
             )
         else:
-            part.write.mode("overwrite").parquet(f"{out_dir}/{name}")
-
-    for frame in (docs, quarantine, gated, deduped, clean, split):
-        frame.unpersist()
-    if leakage_audit:
-        pairs.unpersist()
+            run(rows, name)
     return counts

@@ -229,6 +229,11 @@ def test_curate_corpus_end_to_end(spark, docs, tmp_path):
     out = str(tmp_path / "curated")
     counts = curate_corpus(spark, str(raw), out, n_shards=4, min_quality=0.25)
 
+    assert counts == {
+        "ingested": 122, "quarantined": 1, "after_quality": 78, "after_dedup": 75,
+        "eval_reserved": 13, "after_decontamination": 62,
+        "split_train": 53, "split_val": 2, "split_test": 7,
+    }
     assert counts["ingested"] == len(sample)
     assert counts["quarantined"] == 1
     assert counts["after_quality"] <= counts["ingested"]
@@ -296,6 +301,12 @@ def test_curate_corpus_span_strip_and_lm_filter_stages(spark, docs, tmp_path):
         spark, str(raw), out, n_shards=4, min_quality=0.25,
         strip_spans_k=5, lm_tail_filter=True,
     )
+    assert counts == {
+        "ingested": 100, "quarantined": 0, "after_quality": 63, "after_dedup": 62,
+        "span_emptied": 0, "span_stripped_docs": 1, "after_span_strip": 62,
+        "eval_reserved": 13, "after_decontamination": 49, "after_lm_filter": 32,
+        "split_train": 26, "split_val": 1, "split_test": 5,
+    }
 
     # arithmetic closure of the new stages
     assert (counts["after_span_strip"] + counts["span_emptied"]
@@ -358,10 +369,16 @@ def test_curate_corpus_span_strip_preserves_untouched_n_chars(spark, docs, tmp_p
     raw.write_text("\n".join(_json.dumps(s) for s in sample) + "\n")
 
     out = str(tmp_path / "curated3")
-    curate_corpus(
+    counts = curate_corpus(
         spark, str(raw), out, n_shards=4, min_quality=0.0,
         strip_spans_k=5,
     )
+    assert counts == {
+        "ingested": 100, "quarantined": 0, "after_quality": 100, "after_dedup": 97,
+        "span_emptied": 0, "span_stripped_docs": 2, "after_span_strip": 97,
+        "eval_reserved": 19, "after_decontamination": 78,
+        "split_train": 68, "split_val": 3, "split_test": 7,
+    }
     surviving = []
     for name in ("train_shards", "val", "test", "eval_reserved"):
         try:
@@ -417,6 +434,12 @@ def test_curate_corpus_html_input_stage(spark, docs, tmp_path):
         spark, str(raw), out, n_shards=4, min_quality=0.0, min_tokens=3,
         html_input=True,
     )
+    assert counts == {
+        "ingested": 80, "quarantined": 0, "after_html_extract": 79,
+        "link_density_dropped": 1, "after_quality": 79, "after_dedup": 78,
+        "eval_reserved": 19, "after_decontamination": 59,
+        "split_train": 52, "split_val": 2, "split_test": 5,
+    }
     assert (counts["after_html_extract"] + counts["link_density_dropped"]
             == counts["ingested"])
     assert counts["link_density_dropped"] >= 1
@@ -477,6 +500,11 @@ def test_curate_corpus_expectations_preflight(spark, docs, tmp_path):
         spark, str(raw), out, n_shards=4, min_quality=0.0,
         expectations=[("not_null", "doc_id"), ("unique", "doc_id")],
     )
+    assert counts == {
+        "ingested": 60, "quarantined": 0, "expectations_failed": 0,
+        "after_quality": 60, "after_dedup": 58, "eval_reserved": 19,
+        "after_decontamination": 39, "split_train": 33, "split_val": 2, "split_test": 4,
+    }
     assert counts["expectations_failed"] == 0
     assert counts["ingested"] == len(sample)
 
@@ -506,7 +534,69 @@ def test_curate_corpus_leakage_audit_postcondition(spark, docs, tmp_path):
     counts = curate_corpus(
         spark, str(raw), out, n_shards=4, min_quality=0.25, leakage_audit=True
     )
+    assert counts == {
+        "ingested": 121, "quarantined": 0, "after_quality": 77, "after_dedup": 75,
+        "eval_reserved": 13, "after_decontamination": 62, "leakage_pairs": 0,
+        "split_train": 53, "split_val": 2, "split_test": 7,
+    }
     assert counts["leakage_pairs"] == 0
     audit = spark.read.parquet(f"{out}/leakage_audit")
     assert set(audit.columns) == {"id_a", "id_b", "jaccard", "split_a", "split_b"}
     assert audit.count() == 0
+
+
+def test_curate_corpus_writes_read_stage_checkpoints(spark, docs, tmp_path, monkeypatch):
+    """Each curation stage is materialized once, as a checkpoint that
+    cuts the lineage: no frame curate_corpus hands to a parquet writer
+    or to write_epoch_shards reads a persisted (InMemoryRelation)
+    frame, and each one's executed plan stays small instead of nesting
+    every earlier stage's build plan."""
+    import json as _json
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from secure_agent_api_vector_search_spark.operators import curation
+    from secure_agent_api_vector_search_spark.pipelines import curate_corpus
+
+    handed = {}  # output path -> executed plan of the frame written there
+    write_parquet, write_shards = DataFrameWriter.parquet, curation.write_epoch_shards
+
+    def plan_at_hand_off(path, df):
+        handed[path] = df._jdf.queryExecution().executedPlan().toString()
+
+    def parquet(self, path, *args, **kwargs):
+        plan_at_hand_off(path, self._df)
+        return write_parquet(self, path, *args, **kwargs)
+
+    def shards(documents, path, *args, **kwargs):
+        plan_at_hand_off(path, documents)
+        return write_shards(documents, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    monkeypatch.setattr(curation, "write_epoch_shards", shards)
+
+    raw = tmp_path / "raw.jsonl"
+    cols = ("doc_id", "text", "lang", "source", "n_chars")
+    sample = [
+        {k: r[k] for k in cols} for r in docs.filter(F.col("doc_id") < 100).collect()
+    ]
+    footer = " subscribe to our newsletter terms of service apply"
+    for s in sample:
+        if s["doc_id"] in (40, 41, 42):
+            s["text"] = s["text"] + footer
+    raw.write_text("\n".join(_json.dumps(s) for s in sample) + "\n")
+    out = str(tmp_path / "curated")
+    curate_corpus(
+        spark, str(raw), out, n_shards=4, min_quality=0.25, strip_spans_k=5,
+        leakage_audit=True,
+    )
+
+    assert {f"{out}/{name}" for name in (
+        "rejects/parse", "rejects/quality", "rejects/dedup", "rejects/span_empty",
+        "eval_reserved", "rejects/contamination", "leakage_audit", "train_shards",
+        "val", "test",
+    )} <= set(handed)
+    for path, plan in handed.items():
+        assert "InMemoryRelation" not in plan, path
+        assert len(plan.splitlines()) < 200, (path, len(plan.splitlines()))
