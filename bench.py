@@ -625,7 +625,6 @@ def _pipeline_probe(spark, sf_dir: str) -> dict:
             t0 = time.perf_counter()
             n_leaks = split_leakage_check(docs, threshold=0.6, pairs=pairs).count()
             audit_sec = round(time.perf_counter() - t0, 3)
-            pairs.unpersist()
 
             return {
                 "fixture_prep_sec": prep_sec,
@@ -1085,8 +1084,8 @@ def main() -> int:
             warm[name] = s[0]
             warm_median[name] = s[len(s) // 2]
             warm_reps[name] = reps
-        # drop intermediates persisted inside operators (minhash caches
-        # its signature table) AFTER all reps: queries stay isolated
+        # drop frames a query left cached (the catalog's memoized PQ
+        # codes) AFTER all reps: queries stay isolated
         # from each other, while the warm reps keep intra-query state —
         # the steady-state number a long-lived session would see for a
         # repeated query. Cold = first-execution cost including persists.

@@ -889,8 +889,8 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from secure_agent_api_vector_search_spark.operators.bpe import bpe_encode_corpus
 
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
-    # materialize=False: the gate/bench call is one-shot — a per-call
-    # persisted result would accumulate for the life of the session
+    # materialize=False: the gate/bench call is one-shot, and the lazy
+    # plan's only action is the caller's own (no checkpoint passes)
     out = bpe_encode_corpus(docs, n_merges=24, materialize=False)
     return out.select(
         "doc_id", "n_tokens", F.concat_ws(" ", F.col("ids")).alias("ids_str")
@@ -899,15 +899,14 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bpe_encode_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PIPELINE-shape twin of :func:`bpe_encode`: materialize=True,
-    so the tokenized intermediate is persisted for its two consumers
-    (vocabulary aggregate + encode) instead of recomputed — the mode a
-    training pipeline actually runs, benched so the recorded number is
-    the operator's steady-state cost rather than the one-shot lazy
-    mode's deliberate 2× recompute (VERDICT r7 "What's wrong" #2; the
-    lazy mode stays in `bpe_encode`, the right convention for per-call
-    gates). The returned frame is persisted; bench.py's per-query
-    clearCache (and any long-lived caller's .unpersist()) releases it.
-    Values are identical to `bpe_encode`, so the same generated
+    so the tokenized intermediate is local-checkpointed for its two
+    consumers (vocabulary aggregate + encode) instead of recomputed —
+    the mode a training pipeline actually runs, benched so the recorded
+    number is the operator's steady-state cost rather than the one-shot
+    lazy mode's deliberate 2× recompute (VERDICT r7 "What's wrong" #2;
+    the lazy mode stays in `bpe_encode`, the cheaper shape for a
+    one-shot gate). The checkpoints are freed when the returned frame
+    is dropped. Values are identical to `bpe_encode`, so the same generated
     independent-BPE oracle gates this entry."""
     from secure_agent_api_vector_search_spark.operators.bpe import bpe_encode_corpus
 
@@ -5029,7 +5028,7 @@ ORDER BY id_a, id_b""",
         # the independent sequential BPE gates both execution modes
         description="[EXT] subword-ids composition at its PIPELINE "
                     "shape (materialize=True: tokenized intermediate "
-                    "persisted for its two consumers, no 2x recompute) "
+                    "checkpointed for its two consumers, no 2x recompute) "
                     "— the steady-state cost record of bpe_encode",
         tags=("text", "tokenize")))
     r.register(NamedQuery(

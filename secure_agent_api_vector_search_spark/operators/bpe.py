@@ -11,8 +11,8 @@ map-side combined; vocabulary-bounded, not corpus-bounded), and every
 merge round runs on that table alone: explode adjacent symbol pairs
 weighted by word count → one aggregate → pick winners on the driver
 (bounded: top-k rows) → apply the merges with one Arrow-batched map.
-The words frame stays cached and is replaced per round, so a round is
-two narrow jobs over ~|vocab| rows regardless of corpus size.
+The words frame is a local checkpoint replaced per round, so a round
+is two narrow jobs over ~|vocab| rows regardless of corpus size.
 
 Strict mode (``batch_k=1``) reproduces the canonical greedy algorithm
 exactly — one merge per round, ties broken (count desc, pair lexical
@@ -224,7 +224,7 @@ def train_bpe(
     ONE distributed scan regardless; the merge loop then runs on the
     driver when the distinct-word count fits ``driver_vocab_cap``
     (per-round job latency would dominate by orders of magnitude on a
-    small vocabulary), and as cached distributed rounds above it —
+    small vocabulary), and as checkpointed distributed rounds above it —
     same round logic either way, parity-tested.
 
     ``stats``: pass a dict to receive the run record — ``strategy``
@@ -240,45 +240,35 @@ def train_bpe(
     if batch_k < 1:
         raise ValueError("batch_k must be >= 1")
     rec = stats if stats is not None else {}
-    wc = _word_counts(documents, text_col).persist()
-    try:
-        n_vocab = wc.count()
-        rec["vocab_rows"] = int(n_vocab)
-        if n_vocab <= driver_vocab_cap:
-            rec["strategy"] = "driver"
-            rows = [(r["word"], int(r["cnt"])) for r in wc.collect()]
-            return _local_bpe(rows, n_merges, batch_k, min_count, stats=rec)
-        rec["strategy"] = "distributed"
-        words = _symbolize(wc).persist()
-        words.count()
-    finally:
-        wc.unpersist()
+    wc = _word_counts(documents, text_col).localCheckpoint()
+    n_vocab = wc.count()
+    rec["vocab_rows"] = int(n_vocab)
+    if n_vocab <= driver_vocab_cap:
+        rec["strategy"] = "driver"
+        rows = [(r["word"], int(r["cnt"])) for r in wc.collect()]
+        return _local_bpe(rows, n_merges, batch_k, min_count, stats=rec)
+    rec["strategy"] = "distributed"
+    words = _symbolize(wc).localCheckpoint()
     merges: list[tuple[str, str]] = []
     rec["rounds"] = 0
-    try:
-        while len(merges) < n_merges:
-            rec["rounds"] += 1
-            want = min(batch_k, n_merges - len(merges))
-            # pull a few times the batch so the non-touching filter has
-            # slack; driver memory stays bounded by 4*batch_k rows
-            top = (
-                _pair_counts(words)
-                .filter(F.col("n") >= min_count)
-                .orderBy(F.col("n").desc(), F.col("a").asc(), F.col("b").asc())
-                .limit(4 * want)
-                .collect()
-            )
-            if not top:
-                break
-            picked = _pick_non_touching([(r["a"], r["b"]) for r in top], want)
-            merges.extend(picked)
-            nxt = _apply_merges(words, picked).persist()
-            nxt.count()
-            words.unpersist()
-            words = nxt
-        return merges
-    finally:
-        words.unpersist()
+    while len(merges) < n_merges:
+        rec["rounds"] += 1
+        want = min(batch_k, n_merges - len(merges))
+        # pull a few times the batch so the non-touching filter has
+        # slack; driver memory stays bounded by 4*batch_k rows
+        top = (
+            _pair_counts(words)
+            .filter(F.col("n") >= min_count)
+            .orderBy(F.col("n").desc(), F.col("a").asc(), F.col("b").asc())
+            .limit(4 * want)
+            .collect()
+        )
+        if not top:
+            break
+        picked = _pick_non_touching([(r["a"], r["b"]) for r in top], want)
+        merges.extend(picked)
+        words = _apply_merges(words, picked).localCheckpoint()
+    return merges
 
 
 def bpe_tokenize(
@@ -401,28 +391,25 @@ def bpe_encode_corpus(
     itself stays whole-stage codegen (transform + element_at) with
     ZERO additional shuffles.
 
-    ``materialize=True`` (default) persists the tokenized frame for
-    its two consumers and releases it once the (narrow) output
-    materializes — the minhash_incremental convention; the RETURNED
-    frame stays persisted and long-lived callers should .unpersist()
-    it when done. ``materialize=False`` persists nothing and returns a
-    fully lazy plan (the tokenize map simply runs twice: once under
-    the vocabulary aggregate, once under the encode) — the right mode
-    for one-shot evaluation (gates, benchmarks) where a per-call
-    persisted result would accumulate for the life of the session.
+    ``materialize=True`` (default) local-checkpoints the tokenized
+    frame for its two consumers (vocabulary aggregate + encode) and
+    returns the (narrow) output as an eager local checkpoint too; both
+    are freed when their frames are dropped. ``materialize=False``
+    checkpoints nothing and returns a fully lazy plan (the tokenize map
+    simply runs twice: once under the vocabulary aggregate, once under
+    the encode) — the cheaper shape for a one-shot evaluation whose
+    only action is the caller's own, as in the catalog's gate query.
 
     Output: (doc_id, n_tokens, ids array<int>), n_tokens = subword
     count, ids 1-based (0 = out-of-inventory, impossible here by
     construction but the contract when the vocab is reused).
     """
-    from pyspark.storagelevel import StorageLevel
-
     merges = train_bpe(
         documents, n_merges, text_col=text_col, batch_k=batch_k, min_count=min_count
     )
     toks = bpe_tokenize(documents, merges, text_col=text_col, id_col=id_col)
     if materialize:
-        toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
+        toks = toks.localCheckpoint()
     vocab = bpe_vocab_ids(toks)
     if vocab:
         id_map = F.create_map(
@@ -439,9 +426,7 @@ def bpe_encode_corpus(
         F.transform(F.col("tokens"), enc).alias("ids"),
     )
     if materialize:
-        result = result.persist(StorageLevel.MEMORY_AND_DISK)
-        result.count()
-        toks.unpersist()
+        result = result.localCheckpoint()
     return result
 
 

@@ -152,167 +152,162 @@ def quality_percentile_cut(
     q = X.quality_score("text")
     scored = documents.select(
         F.col(id_col), F.col(group_col), q.alias("quality")
-    ).persist()
-    try:
-        # the percentile margin must cover >= 4 RANKS to beat the
-        # sketch's error plus rank/percentile conversion conventions;
-        # 4/accuracy ranks only exceeds 4 once n > accuracy, so smaller
-        # groups skip the sketch and take the WHOLE group as the band
-        # (a <= accuracy-row window partition — harmless by definition)
-        margin = 4.0 / accuracy
-        p_lo, p_hi = max(0.0, min_pct - margin), min(1.0, min_pct + margin)
-        # ONE aggregate pass computes count AND sketch per group (r13:
-        # previously two sequential passes — count, then a second
-        # filtered scan for the sketch; guide §1.2 "don't compute in
-        # two passes what one pass carries"). The per-group GK sketch
-        # is independent of other groups, so its values are identical
-        # to the old filtered form; sketches of groups that stay on
-        # the whole-group band are simply discarded below.
-        agg_rows = (
-            scored.groupBy(group_col)
+    ).localCheckpoint()
+    # the percentile margin must cover >= 4 RANKS to beat the
+    # sketch's error plus rank/percentile conversion conventions;
+    # 4/accuracy ranks only exceeds 4 once n > accuracy, so smaller
+    # groups skip the sketch and take the WHOLE group as the band
+    # (a <= accuracy-row window partition — harmless by definition)
+    margin = 4.0 / accuracy
+    p_lo, p_hi = max(0.0, min_pct - margin), min(1.0, min_pct + margin)
+    # ONE aggregate pass computes count AND sketch per group (r13:
+    # previously two sequential passes — count, then a second
+    # filtered scan for the sketch; guide §1.2 "don't compute in
+    # two passes what one pass carries"). The per-group GK sketch
+    # is independent of other groups, so its values are identical
+    # to the old filtered form; sketches of groups that stay on
+    # the whole-group band are simply discarded below.
+    agg_rows = (
+        scored.groupBy(group_col)
+        .agg(
+            F.count("*").alias("_n"),
+            # non-null count: the driver-side fill below must
+            # reproduce the old aggregate's `quality <= inf`
+            # semantics exactly (null quality counted in neither
+            # bound), so a group of null scores still trips the
+            # bracket ValueError instead of silently dropping rows
+            F.count("quality").alias("_nn"),
+            F.percentile_approx("quality", [p_lo, p_hi], accuracy).alias("b"),
+        )
+        .collect()
+    )
+    counts = {r[group_col]: int(r["_n"]) for r in agg_rows}
+    nn = {r[group_col]: int(r["_nn"]) for r in agg_rows}
+    # NULL is a legitimate group value (the window form treats it
+    # as its own partition); a big null group simply takes the
+    # whole-group band like small ones (unchanged contract)
+    big = {g for g, n in counts.items() if n > accuracy and g is not None}
+    bstats = {
+        r[group_col]: (float(r["b"][0]), float(r["b"][1]))
+        for r in agg_rows
+        if r[group_col] in big
+    }
+
+    # smallest 1-based rank k with (k-1)/(n-1) >= p, under the SAME
+    # double arithmetic percent_rank uses (adjusted, not assumed)
+    def k_of(n: int) -> int:
+        if n <= 1:
+            return 1 if min_pct <= 0.0 else 2  # 2 = unreachable: drop
+        k = max(1, math.ceil(min_pct * (n - 1) + 1) - 1)
+        while k <= n and (k - 1) / (n - 1) < min_pct:
+            k += 1
+        return k
+
+    inf = float("inf")
+    rows = [
+        (g, n, *bstats.get(g, (-inf, inf)), k_of(n))
+        for g, n in counts.items()
+    ]
+    # group type taken from the SOURCE schema (not hardcoded), and
+    # every driver-frame join is null-SAFE so a NULL group flows
+    # through exactly like the window form's NULL partition
+    from pyspark.sql import types as T
+
+    gtype = scored.schema[group_col].dataType
+    bounds_schema = T.StructType(
+        [
+            T.StructField("_g", gtype),
+            T.StructField("n", T.LongType()),
+            T.StructField("t_lo", T.DoubleType()),
+            T.StructField("t_hi", T.DoubleType()),
+            T.StructField("k", T.LongType()),
+        ]
+    )
+    # local_frame, not createDataFrame: a literal frame must plan
+    # as LocalTableScan — the RDD form cost four 32-task Python-
+    # worker broadcast rebuilds per call here (functions/localdf.py)
+    bounds = F.broadcast(local_frame(spark, rows, bounds_schema))
+    tagged = scored.join(
+        bounds, scored[group_col].eqNullSafe(bounds["_g"])
+    ).drop("_g")
+    # the runtime bracket proof only needs a pass over SKETCHED
+    # groups: a whole-group band (t_lo=-inf, t_hi=inf) has
+    # below = 0 and le_hi = n BY DEFINITION — counting that with an
+    # aggregate was a full extra corpus pass that proved a
+    # tautology (r13; at sf0.1 every group is whole-band and the
+    # checks job disappears outright). The same ValueError
+    # conditions are evaluated for every group either way.
+    checks = [
+        {group_col: g, "n": n, "k": k_of(n), "below": 0, "le_hi": nn[g]}
+        for g, n in counts.items()
+        if g not in big
+    ]
+    if big:
+        checks += [
+            r.asDict()
+            for r in tagged.filter(F.col(group_col).isin(list(big)))
+            .groupBy(group_col, "n", "k")
             .agg(
-                F.count("*").alias("_n"),
-                # non-null count: the driver-side fill below must
-                # reproduce the old aggregate's `quality <= inf`
-                # semantics exactly (null quality counted in neither
-                # bound), so a group of null scores still trips the
-                # bracket ValueError instead of silently dropping rows
-                F.count("quality").alias("_nn"),
-                F.percentile_approx("quality", [p_lo, p_hi], accuracy).alias("b"),
+                F.sum(F.when(F.col("quality") < F.col("t_lo"), 1).otherwise(0))
+                .alias("below"),
+                F.sum(F.when(F.col("quality") <= F.col("t_hi"), 1).otherwise(0))
+                .alias("le_hi"),
             )
             .collect()
-        )
-        counts = {r[group_col]: int(r["_n"]) for r in agg_rows}
-        nn = {r[group_col]: int(r["_nn"]) for r in agg_rows}
-        # NULL is a legitimate group value (the window form treats it
-        # as its own partition); a big null group simply takes the
-        # whole-group band like small ones (unchanged contract)
-        big = {g for g, n in counts.items() if n > accuracy and g is not None}
-        bstats = {
-            r[group_col]: (float(r["b"][0]), float(r["b"][1]))
-            for r in agg_rows
-            if r[group_col] in big
-        }
-
-        # smallest 1-based rank k with (k-1)/(n-1) >= p, under the SAME
-        # double arithmetic percent_rank uses (adjusted, not assumed)
-        def k_of(n: int) -> int:
-            if n <= 1:
-                return 1 if min_pct <= 0.0 else 2  # 2 = unreachable: drop
-            k = max(1, math.ceil(min_pct * (n - 1) + 1) - 1)
-            while k <= n and (k - 1) / (n - 1) < min_pct:
-                k += 1
-            return k
-
-        inf = float("inf")
-        rows = [
-            (g, n, *bstats.get(g, (-inf, inf)), k_of(n))
-            for g, n in counts.items()
         ]
-        # group type taken from the SOURCE schema (not hardcoded), and
-        # every driver-frame join is null-SAFE so a NULL group flows
-        # through exactly like the window form's NULL partition
-        from pyspark.sql import types as T
-
-        gtype = scored.schema[group_col].dataType
-        bounds_schema = T.StructType(
-            [
-                T.StructField("_g", gtype),
-                T.StructField("n", T.LongType()),
-                T.StructField("t_lo", T.DoubleType()),
-                T.StructField("t_hi", T.DoubleType()),
-                T.StructField("k", T.LongType()),
-            ]
+    for c in checks:
+        in_band = c["le_hi"] - c["below"]
+        if in_band > band_cap:
+            raise ValueError(
+                f"quality_percentile_cut: boundary band for group "
+                f"{c[group_col]!r} holds {in_band} rows (> band_cap "
+                f"{band_cap}) — a heavy tied score atom at the cut; "
+                "raise accuracy or fall back to "
+                "quality_percentile_filter"
+            )
+        if c["k"] <= c["n"] and not (c["below"] < c["k"] <= c["le_hi"]):
+            raise ValueError(
+                f"quality_percentile_cut: sketch bracket missed the "
+                f"boundary for group {c[group_col]!r} "
+                f"(below={c['below']}, k={c['k']}, le_hi={c['le_hi']}) "
+                "— raise accuracy"
+            )
+    below_schema = T.StructType(
+        [T.StructField("_g", gtype), T.StructField("below", T.LongType())]
+    )
+    below_df = F.broadcast(
+        local_frame(
+            spark, [(c[group_col], int(c["below"])) for c in checks],
+            below_schema,
         )
-        # local_frame, not createDataFrame: a literal frame must plan
-        # as LocalTableScan — the RDD form cost four 32-task Python-
-        # worker broadcast rebuilds per call here (functions/localdf.py)
-        bounds = F.broadcast(local_frame(spark, rows, bounds_schema))
-        tagged = scored.join(
-            bounds, scored[group_col].eqNullSafe(bounds["_g"])
-        ).drop("_g")
-        # the runtime bracket proof only needs a pass over SKETCHED
-        # groups: a whole-group band (t_lo=-inf, t_hi=inf) has
-        # below = 0 and le_hi = n BY DEFINITION — counting that with an
-        # aggregate was a full extra corpus pass that proved a
-        # tautology (r13; at sf0.1 every group is whole-band and the
-        # checks job disappears outright). The same ValueError
-        # conditions are evaluated for every group either way.
-        checks = [
-            {group_col: g, "n": n, "k": k_of(n), "below": 0, "le_hi": nn[g]}
-            for g, n in counts.items()
-            if g not in big
-        ]
-        if big:
-            checks += [
-                r.asDict()
-                for r in tagged.filter(F.col(group_col).isin(list(big)))
-                .groupBy(group_col, "n", "k")
-                .agg(
-                    F.sum(F.when(F.col("quality") < F.col("t_lo"), 1).otherwise(0))
-                    .alias("below"),
-                    F.sum(F.when(F.col("quality") <= F.col("t_hi"), 1).otherwise(0))
-                    .alias("le_hi"),
-                )
-                .collect()
-            ]
-        for c in checks:
-            in_band = c["le_hi"] - c["below"]
-            if in_band > band_cap:
-                raise ValueError(
-                    f"quality_percentile_cut: boundary band for group "
-                    f"{c[group_col]!r} holds {in_band} rows (> band_cap "
-                    f"{band_cap}) — a heavy tied score atom at the cut; "
-                    "raise accuracy or fall back to "
-                    "quality_percentile_filter"
-                )
-            if c["k"] <= c["n"] and not (c["below"] < c["k"] <= c["le_hi"]):
-                raise ValueError(
-                    f"quality_percentile_cut: sketch bracket missed the "
-                    f"boundary for group {c[group_col]!r} "
-                    f"(below={c['below']}, k={c['k']}, le_hi={c['le_hi']}) "
-                    "— raise accuracy"
-                )
-        below_schema = T.StructType(
-            [T.StructField("_g", gtype), T.StructField("below", T.LongType())]
+    )
+    band = (
+        tagged.filter(
+            (F.col("quality") >= F.col("t_lo"))
+            & (F.col("quality") <= F.col("t_hi"))
         )
-        below_df = F.broadcast(
-            local_frame(
-                spark, [(c[group_col], int(c["below"])) for c in checks],
-                below_schema,
+        .join(below_df, tagged[group_col].eqNullSafe(below_df["_g"]))
+        .drop("_g")
+    )
+    w = Window.partitionBy(group_col).orderBy("quality", id_col)
+    band_kept = (
+        band.withColumn("rank", F.row_number().over(w) + F.col("below"))
+        .filter(
+            (F.col("n") == 1)
+            & F.lit(min_pct <= 0.0)
+            | (F.col("n") > 1)
+            & (
+                (F.col("rank") - 1).cast("double")
+                / (F.col("n") - 1).cast("double")
+                >= F.lit(min_pct)
             )
         )
-        band = (
-            tagged.filter(
-                (F.col("quality") >= F.col("t_lo"))
-                & (F.col("quality") <= F.col("t_hi"))
-            )
-            .join(below_df, tagged[group_col].eqNullSafe(below_df["_g"]))
-            .drop("_g")
-        )
-        w = Window.partitionBy(group_col).orderBy("quality", id_col)
-        band_kept = (
-            band.withColumn("rank", F.row_number().over(w) + F.col("below"))
-            .filter(
-                (F.col("n") == 1)
-                & F.lit(min_pct <= 0.0)
-                | (F.col("n") > 1)
-                & (
-                    (F.col("rank") - 1).cast("double")
-                    / (F.col("n") - 1).cast("double")
-                    >= F.lit(min_pct)
-                )
-            )
-            .select(id_col, group_col, "quality")
-        )
-        above = tagged.filter(F.col("quality") > F.col("t_hi")).select(
-            id_col, group_col, "quality"
-        )
-        out = band_kept.unionByName(above).persist()
-        out.count()
-        return out
-    finally:
-        scored.unpersist()
+        .select(id_col, group_col, "quality")
+    )
+    above = tagged.filter(F.col("quality") > F.col("t_hi")).select(
+        id_col, group_col, "quality"
+    )
+    return band_kept.unionByName(above).localCheckpoint()
 
 
 def pii_redact(documents: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -860,13 +855,12 @@ def split_leakage_check(
     (bench `pipeline.leakage_audit_pairs_supplied`). The supplied
     frame must have been built at a threshold ≤ this audit's (rows
     below ``threshold`` are filtered here; rows it never contained
-    cannot be recovered). ``via``/``n``/``block_col`` are ignored, and
-    the caller keeps ownership of the frame's persistence.
+    cannot be recovered). ``via``/``n``/``block_col`` are ignored.
 
     Output: (id_a, id_b, jaccard, split_a, split_b). With via="lsh"
-    the returned frame is persisted (the banded pair intermediate is
-    released before returning — no session-lifetime cache leaks per
-    audit call); long-lived callers may .unpersist() it when done.
+    the pairs it joins are the eager local checkpoint
+    :func:`ngram_jaccard_pairs_lsh` returns, freed when the returned
+    frame is dropped.
     """
     from secure_agent_api_vector_search_spark.operators.dedup import (
         ngram_jaccard_pairs,
@@ -912,7 +906,7 @@ def split_leakage_check(
         )
     else:
         raise ValueError(f"via must be 'lsh' or 'exact', got {via!r}")
-    out = (
+    return (
         pairs.join(
             splits.select(F.col(id_col).alias("id_a"), F.col("split").alias("split_a")),
             "id_a",
@@ -924,16 +918,3 @@ def split_leakage_check(
         .filter(F.col("split_a") != F.col("split_b"))
         .select("id_a", "id_b", "jaccard", "split_a", "split_b")
     )
-    if via == "lsh":
-        # ngram_jaccard_pairs_lsh returns its pairs frame PERSISTED (it
-        # feeds the gram release inside), but the audit returns a
-        # derived frame, so callers would have no handle to release the
-        # cached pairs — persist the (leak-pair-sized) audit result
-        # instead and release the intermediate here, the same
-        # grams-release convention the pair op itself follows.
-        from pyspark.storagelevel import StorageLevel
-
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()
-        pairs.unpersist()
-    return out

@@ -422,8 +422,6 @@ def minhash_near_dup_pairs(
     candidates more than 3σ below the threshold, so the exact set
     intersection touches ~|true pairs| rows, not ~|band collisions|.
     """
-    from pyspark import StorageLevel
-
     # The signature stage is the CPU hot spot; when the scan
     # under-splits (one small parquet file → 1-2 input partitions) the
     # UDF runs on 2 of N cores. Rebalance only in that case — at
@@ -440,21 +438,21 @@ def minhash_near_dup_pairs(
             F.col("_f.signature").alias("signature"),
             F.col("_f.bands").alias("bands"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
     # materialize before fan-out: the banding stage and the shingle
-    # verify join both consume `feats`; computed concurrently inside one
-    # job they race cache population and each re-runs the
-    # scan→shingle→signature lineage. One eager pass fills the cache.
+    # verify join both consume `feats`; left lazy, each would re-run
+    # the scan→shingle→signature lineage. One eager checkpoint pass
+    # computes it once and is freed when the frame is dropped.
     #
-    # The too-short-doc filter sits ABOVE the persist, not inside the
-    # cached lineage: a filter on the UDF output below a repartition
-    # exchange gets predicate-pushed past the exchange, and because the
-    # predicate references udf(text), the UDF is re-evaluated per
-    # branch just to test it — the whole signature stage ran TWICE
-    # (observed as duplicate ArrowEvalPython nodes under each union
-    # branch). Filtering the cached rows costs one null check.
-    feats.count()
+    # The too-short-doc filter sits ABOVE the checkpoint, not inside
+    # the checkpointed lineage: a filter on the UDF output below a
+    # repartition exchange gets predicate-pushed past the exchange, and
+    # because the predicate references udf(text), the UDF is
+    # re-evaluated per branch just to test it — the whole signature
+    # stage ran TWICE (observed as duplicate ArrowEvalPython nodes under
+    # each union branch). Filtering the checkpointed rows costs one null
+    # check.
     feats = feats.filter(F.col("shingles").isNotNull())
     margin = 3.0 * math.sqrt(0.25 / num_hashes)
     screened = minhash_candidate_pairs(
@@ -546,13 +544,9 @@ def minhash_similarity_join(
     Output: (id_a, id_b, jaccard), id_a from A, id_b from B.
     """
     sig = _shingle_sig_udf(shingle_k, num_hashes, seed, num_bands)
-
-    from pyspark import StorageLevel
-
-    level = StorageLevel.MEMORY_AND_DISK
-    fa = _minhash_side_feats(dfA, sig, text_col, id_col, 0).persist(level)
-    fb = _minhash_side_feats(dfB, sig, text_col, id_col, 1).persist(level)
-    fa.count(), fb.count()  # one eager pass each: banding + verify both consume
+    # one eager pass each: banding + verify both consume
+    fa = _minhash_side_feats(dfA, sig, text_col, id_col, 0).localCheckpoint()
+    fb = _minhash_side_feats(dfB, sig, text_col, id_col, 1).localCheckpoint()
     fa_ok = fa.filter(F.col("shingles").isNotNull())
     fb_ok = fb.filter(F.col("shingles").isNotNull())
     return _cross_screen_verify(
@@ -752,7 +746,6 @@ def ngram_jaccard_pairs_lsh(
     num_hashes: int = 64,
     num_bands: int = 16,
     seed: int = 42,
-    materialize: bool = True,
 ) -> DataFrame:
     """Scale path for token-n-gram Jaccard: MinHash-LSH banding over the
     hashed gram sets for candidates, exact Jaccard verify on the true
@@ -771,16 +764,12 @@ def ngram_jaccard_pairs_lsh(
     array_intersect/union. Output: (id_a, id_b, jaccard).
 
     The gram frame feeds THREE consumers (signatures + both verify
-    sides) and Catalyst does not reuse its exchange across them, so
-    ``materialize=True`` (default) persists it for the run and follows
-    the minhash_incremental convention: the (pair-sized) output is
-    persisted and counted, the gram intermediate released — measured
-    2x warm speedup at sf0.1. Long-lived callers may .unpersist() the
-    returned frame; ``materialize=False`` keeps the plan fully lazy
-    (the gram aggregation simply runs three times).
+    sides) and Catalyst does not reuse its exchange across them, so it
+    is materialized once as an eager ``localCheckpoint`` (a fully lazy
+    plan ran the gram aggregation three times: measured 2x slower warm
+    at sf0.1), and so is the (pair-sized) output. Both checkpoints are
+    freed when their frames are dropped.
     """
-    from pyspark import StorageLevel
-
     if num_hashes % num_bands:
         raise ValueError(
             f"num_hashes ({num_hashes}) must be divisible by "
@@ -801,17 +790,13 @@ def ngram_jaccard_pairs_lsh(
         .groupBy(id_col)
         .agg(F.array_sort(F.collect_set("_gh")).alias("grams"))
         .filter(F.size("grams") > 0)
+        # eager, although a lazy persist let the first action overlap
+        # the gram fill with banding: measured faster warm than that
+        # form (sf0.1, 4 cores, min of 5 reps, 2 runs each:
+        # ngram_jaccard_lsh 3.3-3.6 → 1.2-1.5 s, split_leakage_check
+        # 3.8-4.8 → 2.2-2.4 s)
+        .localCheckpoint()
     )
-    if materialize:
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
-        # NO eager grams.count() here, deliberately (tried r14, VERDICT
-        # r13 item 7): unlike minhash_near_dup_pairs (whose banding and
-        # verify race the cache in ONE job), the first action under
-        # this plan fills the gram cache on its first pass and the
-        # lazy form OVERLAPS the fill with the banding stages; an
-        # eager pass serializes it and measured ~1 s SLOWER at sf0.1
-        # (split_leakage_check 2.53 → 3.53 s warm-min, same-session
-        # A/B; ngram_jaccard_lsh 0.58 → 0.95 s).
     rng = np.random.default_rng(seed)
     a_coef = rng.integers(1, H.MINHASH_P, size=num_hashes, dtype=np.int64)
     b_coef = rng.integers(0, H.MINHASH_P, size=num_hashes, dtype=np.int64)
@@ -861,17 +846,13 @@ def ngram_jaccard_pairs_lsh(
     )
     ga = grams.select(F.col(id_col).alias("id_a"), F.col("grams").alias("_ga"))
     gb = grams.select(F.col(id_col).alias("id_b"), F.col("grams").alias("_gb"))
-    out = (
+    return (
         _attach_pair_payloads(cand, ga, gb)
         .select("id_a", "id_b", H.jaccard(F.col("_ga"), F.col("_gb")).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
         .transform(_pair_order)
+        .localCheckpoint()
     )
-    if materialize:
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()
-        grams.unpersist()
-    return out
 
 
 def embedding_neardup_pairs(
@@ -1679,16 +1660,11 @@ def dedup_incremental_bloom(
     because build and probe share one double-xxhash64 family
     (functions/bloom.py), so exactness is structural, not statistical.
 
-    The result is materialized before return so the batch-side cache
-    used by the two passes (bloom build + anti-join) AND the broadcast
-    bitmap can be released here rather than leak per call (the
-    broadcast is unpersisted non-destructively — a cache-evicted
-    recompute re-ships it from the driver). The RETURNED frame stays
-    persisted (same convention as :func:`minhash_incremental`);
-    long-lived callers may ``.unpersist()`` it when done.
+    The fingerprinted batch feeds two passes (bloom build + anti-join)
+    and is local-checkpointed once; the result is local-checkpointed
+    before return so the broadcast bitmap can be released here rather
+    than leak per call.
     """
-    from pyspark import StorageLevel
-
     from secure_agent_api_vector_search_spark.functions import bloom as B
 
     if "_fp" in batch.columns:
@@ -1697,25 +1673,20 @@ def dedup_incremental_bloom(
             "'_fp' (reserved working column)"
         )
     fp = F.md5(X.normalized_text(text_col))
-    tagged = batch.withColumn("_fp", fp).persist(StorageLevel.MEMORY_AND_DISK)
-    bf = None
+    tagged = batch.withColumn("_fp", fp).localCheckpoint()
+    bf = B.build_bloom(tagged, "_fp", fpp=fpp)
     try:
-        bf = B.build_bloom(tagged, "_fp", fpp=fpp)
         seen_fp = seen.select(fp.alias("_fp"))
         cand = B.filter_might_contain(seen_fp, "_fp", bf)
         fresh = tagged.join(cand, "_fp", "left_anti")
         keepers = fresh.groupBy("_fp").agg(F.min(id_col).alias(id_col))
-        out = (
+        return (
             fresh.join(keepers, ["_fp", id_col], "left_semi")
             .drop("_fp")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .localCheckpoint()
         )
-        out.count()
-        return out
     finally:
-        tagged.unpersist()
-        if bf is not None:
-            bf.destroy()
+        bf.destroy()
 
 
 _LEDGER_BUCKETS = 32
@@ -1798,68 +1769,55 @@ def minhash_incremental(
     cluster keeps exactly one representative.
 
     Scale notes: the batch's shingle/signature pass runs ONCE and both
-    stages bind to it (stage 2 semi-joins the cached feature frame down
-    to the survivors); the ``seen`` side is re-featurized per call,
-    which is the right call up to moderate corpus sizes (one map pass,
-    no shuffle). The 100 TB steady-state form materializes the seen
+    stages bind to it (stage 2 semi-joins the checkpointed feature
+    frame down to the survivors); the ``seen`` side is re-featurized
+    per call, which is the right call up to moderate corpus sizes (one
+    map pass, no shuffle). The 100 TB steady-state form materializes the seen
     feature frame once (write the feats projection to a parquet table
     bucketed by band hash) and rebinds stage (1) to it, making
     per-batch cost O(batch) + one band-key shuffle. Same-parameter
     discipline applies: ``shingle_k/num_hashes/num_bands/seed`` must
     match the values the state was built with — signatures are only
-    comparable within one hash family. The RESULT is returned
-    persisted and materialized (so the intermediate feature frames can
-    be unpersisted here instead of leaking per call); callers owning a
-    long-lived session may `.unpersist()` it when done.
+    comparable within one hash family. The feature frames and the
+    result are eager local checkpoints, freed when their frames are
+    dropped.
     """
-    from pyspark import StorageLevel
-
     from secure_agent_api_vector_search_spark.operators.components import keep_first
 
     sig = _shingle_sig_udf(shingle_k, num_hashes, seed, num_bands)
+    # one eager pass each; both stages consume
+    fb = _minhash_side_feats(batch, sig, text_col, id_col, 0).localCheckpoint()
+    fs = _minhash_side_feats(seen, sig, text_col, id_col, 1).localCheckpoint()
+    b_ok = fb.filter(F.col("shingles").isNotNull())
+    s_ok = fs.filter(F.col("shingles").isNotNull())
+    margin = 3.0 * math.sqrt(0.25 / num_hashes)
+    keep_min = threshold - margin
 
-    level = StorageLevel.MEMORY_AND_DISK
-    fb = _minhash_side_feats(batch, sig, text_col, id_col, 0).persist(level)
-    fs = _minhash_side_feats(seen, sig, text_col, id_col, 1).persist(level)
-    try:
-        fb.count(), fs.count()  # one eager pass each; both stages consume
-        b_ok = fb.filter(F.col("shingles").isNotNull())
-        s_ok = fs.filter(F.col("shingles").isNotNull())
-        margin = 3.0 * math.sqrt(0.25 / num_hashes)
-        keep_min = threshold - margin
+    # stage 1: batch × seen — the SAME screen+verify pipeline the
+    # similarity join (and its gates) run
+    hits = (
+        _cross_screen_verify(b_ok, s_ok, num_hashes, num_bands, threshold)
+        .select(F.col("id_a").alias(id_col))
+        .distinct()
+    )
+    fresh = batch.join(hits, id_col, "left_anti")
 
-        # stage 1: batch × seen — the SAME screen+verify pipeline the
-        # similarity join (and its gates) run
-        hits = (
-            _cross_screen_verify(b_ok, s_ok, num_hashes, num_bands, threshold)
-            .select(F.col("id_a").alias(id_col))
-            .distinct()
-        )
-        fresh = batch.join(hits, id_col, "left_anti")
-
-        # stage 2: within-batch pairs over the SURVIVORS, rebinding the
-        # already-computed batch features (no second shingle pass)
-        f_fresh = b_ok.drop("side").join(
-            fresh.select(F.col(id_col).alias("id")), "id", "left_semi"
-        )
-        screened_w = minhash_candidate_pairs(
-            f_fresh, "id", num_hashes, num_bands, keep_min=keep_min
-        )
-        wh_a = f_fresh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-        wh_b = f_fresh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-        within = (
-            screened_w.join(wh_a, "id_a").join(wh_b, "id_b")
-            .filter(H.jaccard(F.col("sh_a"), F.col("sh_b")) >= threshold)
-            .select("id_a", "id_b")
-        )
-        out = keep_first(fresh, within, id_col=id_col).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        out.count()  # materialize before the feature frames go away
-        return out
-    finally:
-        fb.unpersist()
-        fs.unpersist()
+    # stage 2: within-batch pairs over the SURVIVORS, rebinding the
+    # already-computed batch features (no second shingle pass)
+    f_fresh = b_ok.drop("side").join(
+        fresh.select(F.col(id_col).alias("id")), "id", "left_semi"
+    )
+    screened_w = minhash_candidate_pairs(
+        f_fresh, "id", num_hashes, num_bands, keep_min=keep_min
+    )
+    wh_a = f_fresh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
+    wh_b = f_fresh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
+    within = (
+        screened_w.join(wh_a, "id_a").join(wh_b, "id_b")
+        .filter(H.jaccard(F.col("sh_a"), F.col("sh_b")) >= threshold)
+        .select("id_a", "id_b")
+    )
+    return keep_first(fresh, within, id_col=id_col).localCheckpoint()
 
 
 def text_jaccard_join_exact(

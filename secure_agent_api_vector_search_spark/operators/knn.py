@@ -225,7 +225,7 @@ def ivf_recall_sweep(
 
     IVF's one free parameter trades recall for probe cost; at 100 TB
     nobody should pick it by feel. Ground truth is ONE exact
-    `knn_join` pass (persisted); each candidate nprobe re-ranks through
+    `knn_join` pass (local-checkpointed); each candidate nprobe re-ranks through
     `knn_join_ivf` and the per-query hit fraction aggregates to a
     corpus-level recall@k. The sweep loop is driver-side over ≤ a
     handful of nprobe values — each iteration is a full distributed
@@ -235,20 +235,17 @@ def ivf_recall_sweep(
     """
     truth = knn_join(queries, corpus, k=k, q_id=q_id, q_vec=q_vec,
                      c_id=c_id, c_vec=c_vec).select(
-        F.col(q_id), F.col("neighbor_id")).persist()
-    try:
-        n_truth = truth.count()  # materialize once; also = n_queries * k'
-        # loop-invariant: one distributed distinct, not one per nprobe
-        n_queries = int(truth.select(q_id).distinct().count())
-        frames = []
-        for np_ in nprobes:
-            got = knn_join_ivf(index, queries, k=k, nprobe=np_,
-                               q_id=q_id, q_vec=q_vec).select(
-                F.col(q_id), F.col("neighbor_id"))
-            hit = truth.join(got, [q_id, "neighbor_id"]).count()
-            frames.append((int(np_), float(hit) / float(n_truth), n_queries))
-    finally:
-        truth.unpersist()  # never leak executor cache across sweeps
+        F.col(q_id), F.col("neighbor_id")).localCheckpoint()
+    n_truth = truth.count()  # = n_queries * k'
+    # loop-invariant: one distributed distinct, not one per nprobe
+    n_queries = int(truth.select(q_id).distinct().count())
+    frames = []
+    for np_ in nprobes:
+        got = knn_join_ivf(index, queries, k=k, nprobe=np_,
+                           q_id=q_id, q_vec=q_vec).select(
+            F.col(q_id), F.col("neighbor_id"))
+        hit = truth.join(got, [q_id, "neighbor_id"]).count()
+        frames.append((int(np_), float(hit) / float(n_truth), n_queries))
     spark = queries.sparkSession
     from secure_agent_api_vector_search_spark.functions.localdf import local_frame
 

@@ -22,9 +22,9 @@ spread over k independent tasks).
 Skew hardening (``max_cluster_size`` — the 100 TB seam): web-scale
 embedding spaces have dominant modes, and one hot cluster holding 5%
 of the corpus would arrive as ONE applyInPandas group and OOM that
-task. When any cluster exceeds the cap (one count aggregate checks;
-an unskewed corpus pays nothing else and keeps the exact unhardened
-plan), two bounded repairs run, mirroring ivf.rebuild_if_skewed /
+task. When any cluster exceeds the cap (one count aggregate over the
+checkpointed assignment checks; an unskewed corpus pays nothing
+else), two bounded repairs run, mirroring ivf.rebuild_if_skewed /
 dedup.lsh_planes_for adaptive sizing:
 
 1. **Exact-vector collapse inside hot clusters.** Rows of an oversized
@@ -126,9 +126,10 @@ def _harden_skew(
     ``cap`` rows. Returns (bounded assignment, members) where members
     is the (id, _rep) frame of exact-duplicate rows collapsed out of
     hot clusters (None when the corpus is unskewed — in that case the
-    input is returned untouched and only one count aggregate ran).
+    input is returned as its local checkpoint and only one count
+    aggregate ran over it).
     """
-    assigned = assigned.persist()
+    assigned = assigned.localCheckpoint()
     over = (
         assigned.groupBy("cluster_id")
         .agg(F.count("*").alias("n"))
@@ -153,9 +154,7 @@ def _harden_skew(
     reps = big.join(
         pairs.filter(F.col(id_col) == F.col("_rep")).select(id_col), id_col
     )
-    current = rest.unionByName(reps).persist()
-    current.count()
-    assigned.unpersist()
+    current = rest.unionByName(reps).localCheckpoint()
     spark = current.sparkSession
     # 2. recursive sub-cluster split of whatever is still over cap.
     for rnd in range(rounds):
@@ -199,12 +198,9 @@ def _harden_skew(
                 out[i] = base + int(np.argmin(d))  # ties → lowest sub id
             return pd.Series(out).astype("int32")
 
-        merged = rest.unionByName(
+        current = rest.unionByName(
             big.withColumn("cluster_id", reassign("cluster_id", "_vec"))
-        ).persist()
-        merged.count()
-        current.unpersist()
-        current = merged
+        ).localCheckpoint()
     return current, members
 
 
@@ -297,16 +293,9 @@ def semantic_dedup(
     # slice they display.
     result = out.unionByName(nulls)
     if max_cluster_size is not None:
-        # minhash_incremental convention: the (narrow, 4-column) output
-        # is persisted and materialized HERE so the skew-hardened
-        # assignment persist can be released now instead of leaking for
-        # the life of the session; long-lived callers may .unpersist()
-        # the returned frame when done.
-        from pyspark.storagelevel import StorageLevel
-
-        result = result.persist(StorageLevel.MEMORY_AND_DISK)
-        result.count()
-        assigned.unpersist()
+        # the (narrow, 4-column) output is one eager local checkpoint:
+        # the screen runs once here, not once per caller action
+        result = result.localCheckpoint()
     return result
 
 

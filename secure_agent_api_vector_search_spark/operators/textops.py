@@ -389,15 +389,12 @@ def heavy_hitter_ngrams(
     fitting in aggregate executor memory.
 
     The per-partition gram totals ride along in the candidate frame
-    (gh IS NULL rows), so N needs no third scan. The RETURNED frame
-    (heavy hitters only — small by construction) stays persisted so the
-    candidate summary cache can be dropped here without a later collect
-    re-running both scans; long-lived callers may ``.unpersist()`` it
-    when done (the :func:`minhash_incremental` convention).
+    (gh IS NULL rows), so N needs no third scan. The candidate summary
+    feeds two actions and the returned frame (heavy hitters only —
+    small by construction) is materialized, both as eager local
+    checkpoints, so a later collect does not re-run both scans.
     """
     import math as _math
-
-    from pyspark import StorageLevel
 
     if n < 1:
         raise ValueError("n must be >= 1")
@@ -436,32 +433,20 @@ def heavy_hitter_ngrams(
                                   "cnt": [n_local]})
         yield pd.concat([out, total_row], ignore_index=True)
 
-    summary = hashed.mapInPandas(local_counts, "gh bigint, cnt bigint").persist(
-        StorageLevel.MEMORY_AND_DISK
+    summary = hashed.mapInPandas(local_counts, "gh bigint, cnt bigint").localCheckpoint()
+    total = summary.filter(F.col("gh").isNull()).agg(F.sum("cnt")).collect()[0][0]
+    if not total:
+        return documents.sparkSession.createDataFrame([], "gram string, cnt bigint")
+    k_global = _math.ceil(threshold * total)
+    cand = summary.filter(F.col("gh").isNotNull()).select("gh").distinct()
+    return (
+        grams.withColumn("gh", F.xxhash64("gram"))
+        .join(F.broadcast(cand), "gh", "left_semi")
+        .groupBy("gram")
+        .agg(F.count("*").alias("cnt"))
+        .filter(F.col("cnt") >= F.lit(k_global))
+        .localCheckpoint()
     )
-    try:
-        total = (
-            summary.filter(F.col("gh").isNull()).agg(F.sum("cnt")).collect()[0][0]
-        )
-        empty = documents.sparkSession.createDataFrame(
-            [], "gram string, cnt bigint"
-        )
-        if not total:
-            return empty
-        k_global = _math.ceil(threshold * total)
-        cand = summary.filter(F.col("gh").isNotNull()).select("gh").distinct()
-        out = (
-            grams.withColumn("gh", F.xxhash64("gram"))
-            .join(F.broadcast(cand), "gh", "left_semi")
-            .groupBy("gram")
-            .agg(F.count("*").alias("cnt"))
-            .filter(F.col("cnt") >= F.lit(k_global))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        out.count()
-        return out
-    finally:
-        summary.unpersist()
 
 
 _HTML_DROP_RE = r"(?is)<script\b.*?</script>|<style\b.*?</style>|<!--.*?-->"

@@ -159,12 +159,15 @@ def merge_upsert(
 
     ``n_buckets`` must match the value the table was written with (it
     is validated against the observed partition ids). Crash-safety:
-    the union is materialized (persist + count) before the overwrite
-    begins so the snapshot is consistent, but a crash mid-commit can
-    leave a subset of touched partitions rewritten — per-partition
-    parquet commits are not transactional across partitions; that last
-    step is what a table format (Delta/Iceberg MERGE) hardens, and this
-    function is the drop-in seam for it.
+    the union is materialized as an eager ``localCheckpoint`` before
+    the overwrite begins, so the snapshot is consistent and the write
+    never reads the table it replaces (a lost checkpoint block fails
+    the job loudly instead of recomputing from a half-overwritten
+    table), but a crash mid-commit can leave a subset of touched
+    partitions rewritten — per-partition parquet commits are not
+    transactional across partitions; that last step is what a table
+    format (Delta/Iceberg MERGE) hardens, and this function is the
+    drop-in seam for it.
     """
     upd = updates.withColumn("_kb", _key_bucket(key_col, n_buckets))
     tbl = spark.read.parquet(path)
@@ -184,17 +187,14 @@ def merge_upsert(
         return 0
     pruned = tbl.filter(F.col("_kb").isin(buckets))
     keep = pruned.join(upd.select(key_col).distinct(), key_col, "left_anti")
-    merged = keep.unionByName(upd).persist()
-    try:
-        merged.count()  # materialization barrier: never write over a live read
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_kb")
-            .parquet(path)
-        )
-    finally:
-        merged.unpersist()
+    # materialization barrier: never write over a live read
+    merged = keep.unionByName(upd).localCheckpoint()
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_kb")
+        .parquet(path)
+    )
     return len(buckets)
 
 

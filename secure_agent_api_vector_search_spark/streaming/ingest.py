@@ -480,10 +480,7 @@ def start_neardup_dedup_ingest(
             threshold=threshold,
             seed=seed,
         )
-        try:
-            _epoch_overwrite(embed_documents(fresh, dim), out_dir, epoch_id)
-        finally:
-            fresh.unpersist()
+        _epoch_overwrite(embed_documents(fresh, dim), out_dir, epoch_id)
 
     return (
         stream.writeStream.outputMode("append")

@@ -230,7 +230,6 @@ def test_bpe_encode_corpus_end_to_end(spark, corpus_df):
         assert r.n_tokens == len(r.ids)
         assert [inv[i] for i in r.ids] == tok_rows[d]
         assert 0 not in r.ids  # whole corpus is in-inventory
-    out.unpersist()
 
 
 def test_bpe_encode_corpus_matches_reference_ids(spark, corpus_df):
@@ -261,7 +260,6 @@ def test_bpe_encode_corpus_matches_reference_ids(spark, corpus_df):
     out = bpe_encode_corpus(corpus_df, n_merges=8)
     got = {r.doc_id: list(r.ids) for r in out.collect()}
     assert got == want
-    out.unpersist()
 
 
 def test_tokenizer_fertility_eow_word_count_invariant(spark):

@@ -537,40 +537,91 @@ def test_split_leakage_threshold_one_exact_duplicates_via_lsh(spark):
     assert out == {(min(a, b), max(a, b)): 1.0}
 
 
-def test_split_leakage_lsh_releases_intermediate_caches(spark):
-    """ADVICE r7: each audit call must not leak a session-lifetime
-    persisted pairs frame — only the RETURNED (unpersistable-by-caller)
-    result may stay cached, and the banded-pair intermediate must be
-    released before the audit returns. Uses a corpus no other test
-    builds, so Spark's cache manager cannot satisfy the persist from a
-    previously cached identical plan (which would hide a leak AND break
-    the count)."""
-    from secure_agent_api_vector_search_spark.operators.curation import (
-        split_leakage_check,
+def _probe_docs(spark, tag: str, offset: int = 0):
+    """A few dozen docs with planted near-duplicates, text unique to
+    ``tag`` so no other test builds the same plan."""
+    rows = [
+        (offset + i, "%s probe %d words %s" % (tag, i, "x y z w v u t " * 4))
+        for i in range(24)
+    ] + [
+        (offset + 100 + i, "%s probe %d words %s" % (tag, i, "x y z w v u t " * 4))
+        for i in range(6)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string").withColumn(
+        "lang", F.when(F.col("doc_id") % 2 == 0, "en").otherwise("de")
     )
 
-    rows = [
-        (i, "cache-release probe %d words %s" % (i, "x y z w v u t" * 4))
-        for i in range(40)
-    ] + [(100 + i, "cache-release probe %d words %s" % (i, "x y z w v u t" * 4))
-         for i in range(6)]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+
+def _materializing_calls():
+    from secure_agent_api_vector_search_spark.operators import dedup as D
+
+    return {
+        "minhash_near_dup_pairs": lambda s: D.minhash_near_dup_pairs(
+            _probe_docs(s, "near-dup")
+        ),
+        "minhash_similarity_join": lambda s: D.minhash_similarity_join(
+            _probe_docs(s, "sim-join"), _probe_docs(s, "sim-join", offset=1000)
+        ),
+        "ngram_jaccard_pairs_lsh": lambda s: D.ngram_jaccard_pairs_lsh(
+            _probe_docs(s, "ngram-lsh")
+        ),
+        "split_leakage_check_lsh": lambda s: CU.split_leakage_check(
+            _probe_docs(s, "leakage"), via="lsh"
+        ),
+        "minhash_incremental": lambda s: D.minhash_incremental(
+            _probe_docs(s, "incremental"), _probe_docs(s, "incremental", offset=1000)
+        ),
+        "quality_percentile_cut": lambda s: CU.quality_percentile_cut(
+            _probe_docs(s, "quality")
+        ),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_materializing_calls()))
+def test_operator_results_are_self_freeing_checkpoints(spark, monkeypatch, op):
+    """Operators materialize with eager local checkpoints, never with a
+    persisted frame a caller would have to release: the call persists
+    nothing, its result is not cached, and every persistent RDD it
+    created is gone once the result is dropped and the JVM collects
+    it. Tracks NEW rdd ids, not absolute counts: the session is shared,
+    and Spark's ContextCleaner frees earlier tests' frames
+    asynchronously."""
+    import gc
+    import time
+
+    from pyspark import StorageLevel
+
+    frame_cls = type(spark.range(1))
+    calls = []
+    for name in ("persist", "cache"):
+        real = getattr(frame_cls, name)
+
+        def spy(self, *a, _real=real, _name=name, **kw):
+            calls.append(_name)
+            return _real(self, *a, **kw)
+
+        monkeypatch.setattr(frame_cls, name, spy)
     jsc = spark.sparkContext._jsc
 
     def persisted_ids() -> set[int]:
         return set(jsc.getPersistentRDDs().keySet().toArray())
 
-    # track NEW rdd ids, not absolute counts: under the shared test
-    # session Spark's ContextCleaner asynchronously unpersists frames
-    # garbage-collected from EARLIER tests, so a count snapshot races
-    # (observed in full-suite runs: old entries vanish mid-test)
     before = persisted_ids()
-    out = split_leakage_check(docs, via="lsh")
-    assert out.storageLevel.useMemory  # result persisted for the caller
+    out = _materializing_calls()[op](spark)
+    out.collect()
+    assert calls == []
+    assert out.storageLevel == StorageLevel.NONE
     new = persisted_ids() - before
-    assert len(new) == 1  # exactly the result — intermediates freed
-    out.unpersist()
-    assert not (persisted_ids() & new)
+    del out
+    deadline = time.monotonic() + 15.0
+    while True:
+        gc.collect()
+        spark.sparkContext._jvm.java.lang.System.gc()
+        left = persisted_ids() & new
+        if not left or time.monotonic() > deadline:
+            break
+        time.sleep(0.5)
+    assert not left, f"{op} left persistent RDDs {sorted(left)} after GC"
 
 
 def test_split_leakage_pairs_supplied_matches_built_forms(spark, docs):

@@ -376,20 +376,35 @@ def test_ngram_jaccard_lsh_rejects_bad_bands(docs):
         D.ngram_jaccard_pairs_lsh(docs, num_hashes=64, num_bands=10)
 
 
-def test_lsh_paths_have_no_interpreted_pair_expansion(docs, emb):
+def test_lsh_paths_have_no_interpreted_pair_expansion(docs, emb, monkeypatch):
     """Regression pin for the scale defects fixed in round 4: the LSH
     candidate paths must expand pairs in Arrow-batched python stages
     (MapInPandas / ArrowEval nodes), never via collect_list + nested
-    lambda-transform expressions (interpreted)."""
+    lambda-transform expressions (interpreted). A result that is a
+    local checkpoint plans as a bare RDD scan, so the plans of the
+    frames checkpointed inside the call are read at checkpoint time."""
     from secure_agent_api_vector_search_spark.operators import dedup as D
 
-    plans = {
-        "embedding": D.embedding_neardup_pairs_lsh(emb, threshold=0.85, dim=16),
-        "simhash": D.simhash_near_dup_pairs(docs),
-        "ngram_lsh": D.ngram_jaccard_pairs_lsh(docs),
+    frame_cls = type(docs)
+    real = frame_cls.localCheckpoint
+    checkpointed: list[str] = []
+
+    def spy(self, *a, **kw):
+        checkpointed.append(self._jdf.queryExecution().executedPlan().toString())
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    builds = {
+        "embedding": lambda: D.embedding_neardup_pairs_lsh(emb, threshold=0.85, dim=16),
+        "simhash": lambda: D.simhash_near_dup_pairs(docs),
+        "ngram_lsh": lambda: D.ngram_jaccard_pairs_lsh(docs),
     }
-    for name, df in plans.items():
-        plan = df._jdf.queryExecution().executedPlan().toString()
+    for name, build in builds.items():
+        checkpointed.clear()
+        df = build()
+        plan = "\n".join(
+            checkpointed + [df._jdf.queryExecution().executedPlan().toString()]
+        )
         assert "MapInPandas" in plan, name
         # the interpreted expansion's signature was collect_list of
         # bucket-member structs fed to nested transforms; the gram sets

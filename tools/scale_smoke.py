@@ -381,11 +381,11 @@ def run_suite(spark, base: str) -> dict[str, dict[str, float]]:
 
     # --- pairs-supplied leakage audit (VERDICT r10 item 7): the
     # build-once/audit-many shape pipelines.curate_corpus defaults to.
-    # The pair frame is built and persisted UNTIMED; the audit's wall
-    # must track the pair count (~linear in n at ~constant dup rate),
-    # not the corpus-wide banded build.
+    # The pair frame is built (an eager local checkpoint) UNTIMED; the
+    # audit's wall must track the pair count (~linear in n at ~constant
+    # dup rate), not the corpus-wide banded build.
     if not only or "split_leakage_check_pairs_supplied" in keep:
-        pairs = D.ngram_jaccard_pairs_lsh(docs, threshold=0.6).persist()
+        pairs = D.ngram_jaccard_pairs_lsh(docs, threshold=0.6)
         n_pairs = pairs.count()
         t0 = time.perf_counter()
         CU.split_leakage_check(docs, pairs=pairs).write.format(
@@ -393,7 +393,6 @@ def run_suite(spark, base: str) -> dict[str, dict[str, float]]:
         out["split_leakage_check_pairs_supplied"] = round(
             time.perf_counter() - t0, 2)
         extra["split_leakage_check_pairs_supplied"] = {"n_pairs": n_pairs}
-        pairs.unpersist()
         spark.catalog.clearCache()
     if only:
         return {"sec": out, "sec_warm": warm, "extra": extra}
